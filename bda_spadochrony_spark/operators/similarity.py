@@ -40,6 +40,7 @@ away; those still need the quiescent point.
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window
@@ -152,81 +153,13 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame,
             .where(F.col("rn") <= k).drop("rn"))
 
 
-def cosine_topk_vectorized(corpus: DataFrame, queries: DataFrame,
-                           corpus_id: str, query_id: str,
-                           vec_col: str = "embedding", k: int = 5) -> DataFrame:
-    """Brute-force cosine top-k, vectorized: the query matrix is broadcast
-    to every executor and each corpus partition is scored as ONE numpy
-    matmul (BLAS) inside Arrow-batched ``mapInPandas``, emitting only the
-    partition-local top-(k+1) per query; a final partitioned row_number
-    picks the global top-k.
-
-    This is the documented exception to the no-Python rule: dense vector
-    math through interpreted JVM higher-order functions costs ~100 ns per
-    multiply-add, BLAS costs ~0.1 ns — measured ~30× end-to-end on 5k×5k×64.
-    Shuffle volume is (k+1)·Q per partition, never N·Q.
-    """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    corpus = valid_vectors(corpus, vec_col)
-    queries = valid_vectors(queries, vec_col)
-    spark = corpus.sparkSession
-    qrows = queries.select(F.col(query_id).alias("qid"),
-                           F.col(vec_col).cast("array<double>").alias("v")).collect()
-    qids = np.array([r["qid"] for r in qrows])
-    qmat = np.array([r["v"] for r in qrows], dtype=np.float64)      # Q×d
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    # derive id field types from the inputs — string/int32 ids must survive
-    # the Arrow round-trip, not silently null out against a hardcoded long
-    q_id_type = queries.schema[query_id].dataType
-    c_id_type = corpus.schema[corpus_id].dataType
-    out_schema = StructType([StructField("query_id", q_id_type),
-                             StructField("corpus_id", c_id_type),
-                             StructField("cosine", DoubleType())])
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bqids, bqmat, bqnorm = bc.value
-        kk = k + 1  # self-match may occupy one slot; filtered later
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cmat = np.array(list(pdf["v"]), dtype=np.float64)       # B×d
-            cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-            cos = (cmat @ bqmat.T) / np.outer(cnorm, bqnorm)        # B×Q
-            cids = pdf["cid"].to_numpy()
-            take = min(kk, cos.shape[0])
-            # partition-local top-(k+1) per query, ordered (-cos, corpus_id)
-            idx = np.lexsort((cids[:, None].repeat(cos.shape[1], 1), -cos), axis=0)[:take]
-            qcol = np.tile(bqids, (take, 1))
-            yield pd.DataFrame({
-                "query_id": qcol.ravel(),
-                "corpus_id": cids[idx].ravel(),
-                "cosine": np.take_along_axis(cos, idx, axis=0).ravel()})
-
-    c = corpus.select(F.col(corpus_id).alias("cid"),
-                      F.col(vec_col).cast("array<double>").alias("v"))
-    scored = c.mapInPandas(score, schema=out_schema) \
-              .where(F.col("corpus_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               F.col("corpus_id").asc())
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k).drop("rn"))
-
-
 def cosine_topk_blocked(corpus: DataFrame, queries: DataFrame,
                         corpus_id: str, query_id: str,
                         vec_col: str = "embedding", k: int = 5,
                         corpus_blocks: int = 8, query_blocks: int = 4) -> DataFrame:
     """Exact brute-force cosine top-k as a distributed BLOCK matmul — no
-    driver round-trip at all (the weakness of ``cosine_topk_vectorized``,
-    which materializes the query matrix on the driver to broadcast it).
+    driver round-trip at all: neither side is collected to the driver
+    or broadcast, so the query set may be as large as the corpus.
 
     Block nested-loop shape: corpus rows hash into ``corpus_blocks``
     buckets and are replicated across the ``query_blocks`` partner ids;
@@ -342,10 +275,10 @@ def cells_for(n_vectors: int, min_cells: int = 4,
     At the oracle contract scale (500 vectors) the rule returns
     ceil(sqrt(250)) = 16, the previously-pinned default, so parity
     values are unchanged by construction. Bounded below (tiny corpora
-    should still partition) and above (the centers frame is broadcast
-    and the assignment crossJoin carries k columns·rows — 2^16 centers
-    ≈ 32 MB at d=64 float64, the broadcast comfort ceiling; beyond
-    that, shard the corpus and dedup per shard)."""
+    should still partition) and above (the quantizer is collected and
+    shipped in every assignment task's closure — 2^16 centers ≈ 32 MB
+    at d=64 float64; beyond that, shard the corpus and dedup per
+    shard)."""
     import math
     return max(min_cells,
                min(max_cells, math.ceil(math.sqrt(max(n_vectors, 1) / 2))))
@@ -522,58 +455,35 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame,
         km = KMeans(k=n_lists, seed=seed, maxIter=10).fit(cv)
         c_assigned = km.transform(cv).select("corpus_id", "cvec",
                                              F.col("prediction").alias("cell"))
-        centroids = [(i, [float(x) for x in ctr])
-                     for i, ctr in enumerate(km.clusterCenters())]
-        cent_df = F.broadcast(corpus.sparkSession.createDataFrame(
-            centroids, ["cell", "centroid"]))
-        # KMeans centers are means of valid (finite) vectors — always
-        # kernel-safe — and cent_df's inferred cell type is bigint
-        center_rows, cell_type = sorted(centroids), "bigint"
+        # KMeans centers are means of valid (finite) vectors, and the
+        # inferred cell type of an enumerate() index is bigint
+        center_rows = sorted((i, [float(x) for x in ctr])
+                             for i, ctr in enumerate(km.clusterCenters()))
+        cell_type = "bigint"
     else:
-        cent_df = F.broadcast(
-            centers.select(F.col("cell"),
-                           F.col("centroid").cast("array<double>").alias("centroid")))
         center_rows = _kernel_center_rows(centers)
         cell_type = dict(centers.dtypes)["cell"]
-        if center_rows is None:
-            # degenerate quantizer (see _kernel_center_rows): the
-            # broadcast nested loop + one window per corpus row
-            c_assigned = _assign_primary_cells(c, centers, "corpus_id")
-        else:
-            # nearest-center assignment (squared euclidean; ties →
-            # lower cell, duplicate-id rule intact) as the Arrow kernel
-            # + slim per-id window (r16 — shared with the
-            # persisted-index maintenance path, see
-            # _assign_primary_cells_kernel)
-            c_assigned = _assign_primary_cells_kernel(c, center_rows,
-                                                      cell_type)
+        # nearest-center assignment (squared euclidean; ties → lower
+        # cell, duplicate-id rule intact) as the Arrow kernel + slim
+        # per-id window (r16 — shared with the persisted-index
+        # maintenance path, see _assign_primary_cells_kernel)
+        c_assigned = _assign_primary_cells_kernel(c, center_rows,
+                                                  cell_type)
     c_assigned = with_norm(c_assigned, "cvec", "cnorm")
     q = valid_vectors(queries, vec_col) \
         .select(F.col(query_id).alias("query_id"),
                 F.col(vec_col).cast("array<double>").alias("qvec"))
-    if center_rows is None:
-        q = with_norm(q, "qvec", "qnorm")
-        qc = (q.crossJoin(cent_df)
-              .withColumn("dist", F.sqrt(F.aggregate(
-                  F.zip_with("qvec", "centroid", lambda a, b: (a - b) * (a - b)),
-                  F.lit(0.0), lambda acc, v: acc + v))))
-        wq = Window.partitionBy("query_id").orderBy(F.col("dist").asc(),
-                                                    F.col("cell").asc())
-        probes = (qc.withColumn("rn", F.row_number().over(wq))
-                  .where(F.col("rn") <= n_probe)
-                  .select("query_id", "qvec", "qnorm", "cell"))
-    else:
-        # probe ranking as the kernel + slim re-rank window (r16):
-        # sqrt_rank because THIS window form ranks on euclidean
-        # DISTANCE — two distinct dist2 can round to one sqrt, engaging
-        # the cell-asc tie-break the kernel must reproduce
-        probes = _probe_cells_kernel(
-            q.select("query_id", F.col("qvec").alias("cvec")),
-            center_rows, cell_type, n_probe, sqrt_rank=True) \
-            .select(F.col("id").alias("query_id"),
-                    F.col("v").alias("qvec"), "cell")
-        probes = with_norm(probes, "qvec", "qnorm") \
-            .select("query_id", "qvec", "qnorm", "cell")
+    # probe ranking as the kernel + slim re-rank window (r16): sqrt_rank
+    # because ivf_topk's probe rule ranks on euclidean DISTANCE — two
+    # distinct dist2 can round to one sqrt, engaging the cell-asc
+    # tie-break
+    probes = _probe_cells_kernel(
+        q.select("query_id", F.col("qvec").alias("cvec")),
+        center_rows, cell_type, n_probe, sqrt_rank=True) \
+        .select(F.col("id").alias("query_id"),
+                F.col("v").alias("qvec"), "cell")
+    probes = with_norm(probes, "qvec", "qnorm") \
+        .select("query_id", "qvec", "qnorm", "cell")
 
     # score the probed cells as cogrouped BLAS tiles (shared with the
     # persisted-index search — see ann_index_topk's measured A/B: the
@@ -584,64 +494,32 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame,
                            probes, k)
 
 
-def _assign_primary_cells(vecs: DataFrame, centers: DataFrame,
-                          id_out: str,
-                          keep_dist2: bool = False) -> DataFrame:
-    """Nearest-center assignment against a tiny broadcast (cell,
-    centroid) frame — squared euclidean, ties to the lower cell, the
-    exact rule ``ivf_topk``'s explicit-centers branch and its oracle
-    state. Input ``vecs`` carries (id, cvec); output adds ``cell``
-    (and, with ``keep_dist2``, the winning squared distance — the
-    drift monitor's raw signal)."""
-    cent = F.broadcast(centers.select(
-        F.col("cell"),
-        F.col("centroid").cast("array<double>").alias("centroid")))
-    cc = (vecs.crossJoin(cent)
-          .withColumn("dist2", F.aggregate(
-              F.zip_with("cvec", "centroid",
-                         lambda a, b: (a - b) * (a - b)),
-              F.lit(0.0), lambda acc, v: acc + v)))
-    w = Window.partitionBy(id_out).orderBy(F.col("dist2").asc(),
-                                           F.col("cell").asc())
-    cols = [id_out, "cvec", "cell"] + (["dist2"] if keep_dist2 else [])
-    return (cc.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(*cols))
-
-
 def quantizer_profile(df: DataFrame, centers: DataFrame, id_col: str,
                       vec_col: str = "embedding") -> DataFrame:
     """Per-cell census of a corpus under a FIXED quantizer — the raw
     material of the drift monitor (r12, VERDICT r11 #3): every valid
-    vector is assigned to its primary cell (the ``_assign_primary_cells``
-    rule every IVF operator shares) and the profile aggregates
-    ``(cell, n, mean_d2)`` — occupancy and mean squared assignment
-    distance. One row per quantizer cell (silent cells keep n=0 and
-    NULL mean_d2 via the left join onto the centers' own cell list).
+    vector is assigned to its primary cell (the
+    ``_assign_primary_cells_kernel`` rule every IVF operator shares)
+    and the profile aggregates ``(cell, n, mean_d2)`` — occupancy and
+    mean squared assignment distance. One row per quantizer cell
+    (silent cells keep n=0 and NULL mean_d2 via the left join onto the
+    centers' own cell list).
 
-    Scale shape: the assignment is a broadcast nested loop over the
-    tiny centers frame plus one id-keyed window; the profile then
-    reduces map-side to quantizer-sized output (≤ n_cells rows) — at
-    100 TB this is one corpus scan that shuffles ONLY per-cell partial
-    aggregates. Persist the fit-time profile next to the centers
-    artifact; re-run on the live corpus and feed both to
-    ``quantizer_drift`` to decide refits."""
+    Scale shape: the assignment is one map-only Arrow kernel pass (the
+    quantizer rides in the task closure) plus one slim id-keyed window
+    over n rows; the profile then reduces map-side to quantizer-sized
+    output (≤ n_cells rows) — at 100 TB this is one corpus scan that
+    shuffles ONLY per-cell partial aggregates. Persist the fit-time
+    profile next to the centers artifact; re-run on the live corpus
+    and feed both to ``quantizer_drift`` to decide refits."""
     vecs = valid_vectors(df, vec_col).select(
         F.col(id_col).alias("__qid"),
         F.col(vec_col).cast("array<double>").alias("cvec"))
-    center_rows = _kernel_center_rows(centers)
-    if center_rows is None:
-        # degenerate quantizer (see _kernel_center_rows)
-        assigned = _assign_primary_cells(vecs, centers, "__qid",
-                                         keep_dist2=True)
-    else:
-        # the census assignment as the Arrow kernel + slim per-id
-        # window (r16): dist2 is the kernel's own fold value —
-        # bit-identical summation order — so (n, mean_d2) match the
-        # window form exactly
-        assigned = _assign_primary_cells_kernel(
-            vecs, center_rows, dict(centers.dtypes)["cell"],
-            id_out="__qid", keep_dist2=True)
+    # dist2 is the kernel's own fold value — bit-identical summation
+    # order — so (n, mean_d2) match the SQL window form exactly
+    assigned = _assign_primary_cells_kernel(
+        vecs, _kernel_center_rows(centers), dict(centers.dtypes)["cell"],
+        id_out="__qid", keep_dist2=True)
     prof = (assigned.groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.avg("dist2").alias("mean_d2")))
@@ -1220,17 +1098,10 @@ def ann_index_rebuild(spark, index_path: str, n_cells: int | None = None,
     vecs = _ann_index_scan(spark, index_path, ["corpus_id", "cvec"])
     centers = kmeans_centers(vecs, "cvec", n_cells=n_cells, seed=seed) \
         .localCheckpoint()
-    center_rows = _kernel_center_rows(centers)
-    if center_rows is None:
-        assigned = _assign_primary_cells(vecs, centers, "corpus_id",
-                                         keep_dist2=True)
-    else:
-        # re-layout assignment as the Arrow kernel + slim per-id
-        # window (r16) — KMeans centers are always kernel-safe; the
-        # guard stays for uniformity with every other call site
-        assigned = _assign_primary_cells_kernel(
-            vecs, center_rows, dict(centers.dtypes)["cell"],
-            keep_dist2=True)
+    # re-layout assignment as the Arrow kernel + slim per-id window
+    assigned = _assign_primary_cells_kernel(
+        vecs, _kernel_center_rows(centers), dict(centers.dtypes)["cell"],
+        keep_dist2=True)
     staging = f"{index_path}__rebuild_{uuid.uuid4().hex[:8]}"
     _write_batch_profile(assigned, staging, -1)
     (with_norm(assigned.drop("dist2"), "cvec", "cnorm")
@@ -1309,36 +1180,40 @@ def ann_index_rebuild_pq(spark, index_path: str, source: DataFrame,
     return centers, codebooks, reference
 
 
-def _kernel_center_rows(centers: DataFrame) -> list | None:
-    """Collect a (cell, centroid) quantizer frame into the sorted
-    ``center_rows`` list the ``_assign_cells`` kernel takes — or None
-    when the quantizer is not kernel-safe and the caller must keep the
-    broadcast-crossJoin + window form: empty, a NULL cell or centroid,
-    a NULL/non-finite centroid ELEMENT (the window's SQL fold
-    NULL-poisons/NaN-ranks those per Spark ordering semantics, which
-    numpy argmin does not reproduce), or RAGGED centroid lengths (the
-    window scores each centroid independently; the kernel assumes one
-    quantizer dimension). Real quantizers — KMeans fits, subset
-    quantizers over ``valid_vectors`` rows — are uniform and finite, so
-    the fallback exists for the degenerate frames only; sorting makes
-    numpy's first-minimum tie-break equal the window's cell-asc rule."""
-    rows = centers.select("cell", "centroid").collect()
+def _kernel_center_rows(centers: DataFrame) -> list:
+    """THE quantizer loader of every IVF operator: collect a (cell,
+    centroid) frame into the ``center_rows`` list the ``_assign_cells``
+    kernel takes — ``(cell, [float, ...])`` pairs sorted by cell, so
+    numpy's first-minimum tie-break equals the documented cell-asc
+    rule; ``[]`` for an empty quantizer (every operator then returns
+    its typed empty result). The collect is quantizer-bounded — the
+    documented fit-step exception.
+
+    A quantizer whose nearest-center rule is undefined raises
+    ``ValueError`` naming the fault: a NULL cell, a NULL centroid, a
+    NULL or non-finite centroid ELEMENT (numpy argmin would send the
+    corpus to a NaN cell while the probe ranking sorts it last — a
+    silent recall loss), or mixed centroid lengths (the quantizer has
+    no one dimension). KMeans fits and subset quantizers over
+    ``valid_vectors`` rows never hit these."""
     out = []
-    for r in rows:
-        if r["cell"] is None or r["centroid"] is None:
-            return None
-        c = r["centroid"]
-        vals = []
-        for x in c:
-            if x is None:
-                return None
-            fx = float(x)
-            if fx != fx or fx in (float("inf"), float("-inf")):
-                return None
-            vals.append(fx)
-        out.append((r["cell"], vals))
-    if not out or len({len(c) for _, c in out}) != 1:
-        return None
+    for r in centers.select("cell", "centroid").collect():
+        cell, c = r["cell"], r["centroid"]
+        if cell is None:
+            raise ValueError("quantizer has a NULL cell")
+        if c is None:
+            raise ValueError(f"quantizer cell {cell!r} has a NULL centroid")
+        if any(x is None for x in c):
+            raise ValueError(
+                f"quantizer cell {cell!r} has a NULL centroid element")
+        vals = [float(x) for x in c]
+        if not all(math.isfinite(x) for x in vals):
+            raise ValueError(
+                f"quantizer cell {cell!r} has a non-finite centroid element")
+        out.append((cell, vals))
+    if len({len(c) for _, c in out}) > 1:
+        raise ValueError("quantizer centroids have mixed lengths: "
+                         f"{sorted({len(c) for _, c in out})}")
     out.sort()
     return out
 
@@ -1347,20 +1222,22 @@ def _assign_primary_cells_kernel(vecs: DataFrame, center_rows: list,
                                  cell_type: str,
                                  id_out: str = "corpus_id",
                                  keep_dist2: bool = False) -> DataFrame:
-    """``_assign_primary_cells`` (crossJoin + per-id window over n·k
-    centroid-carrying rows) as the Arrow kernel + ONE slim per-id window
-    over the kernel's n output rows (r16, VERDICT r15 #1). The window is
-    kept ONLY for the duplicate-id rule — the window form partitions by
-    id, so duplicate-id rows compete and the globally best (dist2 asc
-    NULLS FIRST, cell asc) row survives; a ragged row's dist2 is the
-    NULL-poisoned fold, so it BEATS a well-formed duplicate, exactly as
-    the crossJoin form's all-NULL rows sort first. Input ``vecs`` is
-    (``id_out``, cvec); output adds ``cell`` (and with ``keep_dist2``
-    the winning squared distance — the drift monitor's raw signal,
-    bit-identical because ``_np_fold_sq_dists`` reproduces the SQL
-    fold's summation order). Bit-identical to ``_assign_primary_cells``
-    on every input (equality-pinned incl. duplicate and ragged ids in
-    tests/test_pipeline_ops.py)."""
+    """Primary-cell assignment of every raw-vector IVF operator: the
+    nearest center (squared euclidean, ties to the lower cell) as the
+    Arrow kernel + ONE slim per-id window over the kernel's n output
+    rows (r16, VERDICT r15 #1), replacing a broadcast nested-loop join +
+    per-id window over n·k centroid-carrying rows. The window is kept
+    ONLY for
+    the duplicate-id rule — duplicate-id rows compete and the
+    globally best (dist2 asc NULLS FIRST, cell asc) row survives; a
+    ragged row's dist2 is the NULL-poisoned fold, so it BEATS a
+    well-formed duplicate. Input ``vecs`` is (``id_out``, cvec); output adds
+    ``cell`` (and with ``keep_dist2`` the winning squared distance —
+    the drift monitor's raw signal, bit-identical because
+    ``_np_fold_sq_dists`` reproduces the SQL fold's summation order).
+    Bit-identical to the nested-loop + window form on every input
+    (equality-pinned incl. duplicate and ragged ids against the
+    reference in tests/test_pipeline_ops.py)."""
     ker = _assign_cells(
         vecs.select(F.col(id_out).alias("id"),
                     F.col("cvec").alias("v")),
@@ -1380,7 +1257,7 @@ def _probe_cells_kernel(q: DataFrame, center_rows: list, cell_type: str,
     """``ann_index_topk``'s probe ranking (top-n_probe cells per query
     by dist2 asc, cell asc) as the Arrow kernel + ONE slim per-id window
     over the kernel's n·n_probe candidate rows instead of the n·k
-    crossJoin explosion (r16). The re-rank window reproduces the
+    nested-loop join explosion (r16). The re-rank window reproduces the
     DUPLICATE-query-id rule: duplicate rows compete for one global
     top-n_probe per id value, and any globally-ranked (row, cell) pair
     ranks at least as high within its own row's top-n_probe, so the
@@ -1421,45 +1298,19 @@ def ann_index_append(batch_df: DataFrame, batch_id: int, index_path: str,
     vecs = valid_vectors(batch_df, vec_col).select(
         F.col(id_col).alias("corpus_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"))
-    center_rows = _kernel_center_rows(centers)
-    if center_rows is None:
-        # crossJoin + per-id window: degenerate quantizers the kernel
-        # can't reproduce (see _kernel_center_rows)
-        assigned = _assign_primary_cells(vecs, centers, "corpus_id",
-                                         keep_dist2=profile)
-        if profile:
-            # the drift monitor's raw material (``ann_index_drift``) —
-            # one extra quantizer-sized aggregate per batch, opt-in so
-            # the bare-index contract queries don't pay it
-            _write_batch_profile(assigned, index_path, batch_id)
-            assigned = assigned.drop("dist2")
-    elif profile:
-        # the PROFILED append rides the same kernel since the kernel
-        # emits the winner's dist2 (r16, keep_dist2 — bit-identical
-        # fold value), so the drift census no longer forces the
-        # crossJoin+window form
-        assigned = _assign_primary_cells_kernel(
-            vecs, center_rows, dict(centers.dtypes)["cell"],
-            keep_dist2=True)
+    # one map-only Arrow kernel pass + a per-id window over its n slim
+    # rows (r16, VERDICT r15 #1): the window keeps the duplicate-id rule
+    # (one survivor per id, best (dist2, cell), NULL dist2 first; the
+    # edge-duplicate-keys fixture is the regression test). The kernel
+    # emits the winner's dist2, so the opt-in PROFILED append — the
+    # drift monitor's raw material (``ann_index_drift``), one
+    # quantizer-sized aggregate per batch — rides the same pass.
+    assigned = _assign_primary_cells_kernel(
+        vecs, _kernel_center_rows(centers), dict(centers.dtypes)["cell"],
+        keep_dist2=profile)
+    if profile:
         _write_batch_profile(assigned, index_path, batch_id)
         assigned = assigned.drop("dist2")
-    else:
-        # assignment as ONE map-only Arrow kernel (r16, VERDICT r15 #1
-        # — the raw twin of ann_index_append_pq's r15 fusion): the
-        # crossJoin exploded every batch to n·k rows, each carrying the
-        # float64 vector AND the joined centroid through a per-id
-        # window SHUFFLE (~1.3 s/micro-batch class at sf0.1); the
-        # kernel ships the quantizer in the task closure and the batch
-        # crosses the Arrow boundary once, n rows. mismatch_cell=
-        # "lowest" reproduces the window's ragged-row rule exactly and
-        # the per-id window BELOW — over the kernel's n slim rows, not
-        # the n·k centroid-carrying explosion — reproduces its
-        # duplicate-id rule (one survivor per id, best (dist2, cell),
-        # NULL dist2 first; the edge-duplicate-keys fixture is the
-        # regression test), so the stored layout is bit-identical to
-        # the window form's on every input.
-        assigned = _assign_primary_cells_kernel(
-            vecs, center_rows, dict(centers.dtypes)["cell"])
     (with_norm(assigned, "cvec", "cnorm")
      .repartition(F.col("cell"))
      .write.mode("overwrite").partitionBy("cell")
@@ -1512,38 +1363,16 @@ def ann_index_topk(spark, index_path: str, queries: DataFrame,
     q = valid_vectors(queries, vec_col).select(
         F.col(query_id).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"))
-    center_rows = _kernel_center_rows(centers)
-    if center_rows is None:
-        # degenerate quantizer (see _kernel_center_rows): the
-        # crossJoin + per-id window probe ranking
-        cent = F.broadcast(centers.select(
-            F.col("cell"),
-            F.col("centroid").cast("array<double>").alias("centroid")))
-        qc = (q.crossJoin(cent)
-              .withColumn("dist2", F.aggregate(
-                  F.zip_with("cvec", "centroid",
-                             lambda a, b: (a - b) * (a - b)),
-                  F.lit(0.0), lambda acc, v: acc + v)))
-        wq = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
-                                                    F.col("cell").asc())
-        probes = (qc.withColumn("rn", F.row_number().over(wq))
-                  .where(F.col("rn") <= n_probe)
-                  .select("query_id",
-                          F.col("cvec").alias("qvec"), "cell"))
-    else:
-        # ranked n_probe assignment as the map-only Arrow kernel (r16):
-        # same (dist2 asc, cell asc) ranking, same mismatched-length
-        # rule (lowest cells), no n·k crossJoin rows — the per-query
-        # window below re-ranks the kernel's n·n_probe candidate rows
-        # (vs the window form's n·k) only to reproduce the
-        # DUPLICATE-query-id rule: duplicate rows compete for one
-        # global top-n_probe per id, and any globally-ranked pair is
-        # ranked at least as high within its own row's top-n_probe, so
-        # the candidate union contains the window form's exact answer
-        probes = _probe_cells_kernel(
-            q, center_rows, dict(centers.dtypes)["cell"], n_probe) \
-            .select(F.col("id").alias("query_id"),
-                    F.col("v").alias("qvec"), "cell")
+    # ranked n_probe assignment as the map-only Arrow kernel (r16):
+    # (dist2 asc, cell asc) ranking, mismatched-length rows take the
+    # lowest cells, no n·k joined rows — the per-query window inside
+    # _probe_cells_kernel re-ranks the n·n_probe candidates only for
+    # the DUPLICATE-query-id rule
+    probes = _probe_cells_kernel(
+        q, _kernel_center_rows(centers), dict(centers.dtypes)["cell"],
+        n_probe) \
+        .select(F.col("id").alias("query_id"),
+                F.col("v").alias("qvec"), "cell")
     probes = with_norm(probes, "qvec", "qnorm").localCheckpoint(
         eager=False)
     # the probed-cell set is quantizer-bounded (≤ n_cells values) — a
@@ -1624,21 +1453,21 @@ def ann_index_append_pq(batch_df: DataFrame, batch_id: int,
     # vs ~14 s spread; the shuffle carries one slim row per vector
     vecs = vecs.repartition(F.col("corpus_id"))
     # NOT checkpointed (r12 A/B): a localCheckpoint here — meant to stop
-    # the codes branch recomputing the assignment — measured SLOWER
-    # (18.5 s vs 12.5 s at sf0.1) and raised spurious lost-accumulator
-    # errors inside foreachBatch; the recomputed branch is a cheap
-    # broadcast crossJoin and the checkpoint's materialization of the
-    # vector column cost more than it saved
-    center_rows = sorted(
-        (r["cell"], [float(x) for x in r["centroid"]])
-        for r in centers.select("cell", "centroid").collect())
+    # the profiled append's codes branch recomputing the assignment —
+    # measured SLOWER (18.5 s vs 12.5 s at sf0.1) and raised spurious
+    # lost-accumulator errors inside foreachBatch; the recomputed branch
+    # is one map-only kernel pass and the checkpoint's materialization
+    # of the vector column cost more than it saved
+    center_rows = _kernel_center_rows(centers)
+    cell_type = dict(centers.dtypes)["cell"]
     if profile or not center_rows:
         # the drift census needs the winner's dist2 and the raw layout's
-        # window null rule, so the profiled append keeps the
-        # crossJoin+window form (empty centers degrade to an empty
-        # append through the same join)
-        assigned = _assign_primary_cells(vecs, centers, "corpus_id",
-                                         keep_dist2=profile)
+        # ragged/duplicate-id rules, so the profiled append assigns with
+        # the raw layout's kernel and encodes afterwards (an empty
+        # quantizer assigns nothing: an empty append)
+        assigned = _assign_primary_cells_kernel(vecs, center_rows,
+                                                cell_type,
+                                                keep_dist2=profile)
         if profile:
             _write_batch_profile(assigned, index_path, batch_id)
             assigned = assigned.drop("dist2")
@@ -1649,7 +1478,7 @@ def ann_index_append_pq(batch_df: DataFrame, batch_id: int,
                               want_codes=True, want_rnm=True)
     else:
         # ONE fused kernel for assignment + encode + reconstruction
-        # norm (r15): the crossJoin+window assignment measured ~1.3 s
+        # norm (r15): the join+window assignment measured ~1.3 s
         # per micro-batch at sf0.1 (n·k rows through a per-id window)
         # vs ~0.2 s inside the kernel, and the separate encode frame
         # forced a join shuffle. Uniform-length rows assign
@@ -1661,7 +1490,7 @@ def ann_index_append_pq(batch_df: DataFrame, batch_id: int,
         out = _pq_corpus_cols(vecs.select("corpus_id", "cvec"), "cvec",
                               codebooks, keep=["corpus_id"],
                               center_rows=center_rows,
-                              cell_type=dict(centers.dtypes)["cell"],
+                              cell_type=cell_type,
                               want_codes=True, want_rnm=True)
     if pack:
         packed = reduce(
@@ -1841,15 +1670,11 @@ def ann_index_pq_topk(spark, index_path: str, queries: DataFrame,
     q = valid_vectors(queries, vec_col).select(
         F.col(query_id).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"))
-    # probe assignment via the MAP-ONLY literal fold (`_assign_cells` —
-    # bit-identical tie-breaks to the window form, measured ~50× faster
-    # at quantizer sizes where n·k rows would otherwise shuttle through
-    # a per-id window shuffle; the r12 A/B on this very search read
-    # 32.4 s window vs ~11 s fold at 20k×141 cells). The centers
-    # collect is quantizer-bounded — the documented fit-step exception.
-    center_rows = sorted(
-        (r["cell"], [float(x) for x in r["centroid"]])
-        for r in centers.select("cell", "centroid").collect())
+    # probe assignment inside the map-only fused probe kernel
+    # (`_pq_probe_cols` — bit-identical tie-breaks to the window form;
+    # the r12 A/B on this very search read 32.4 s window vs ~11 s
+    # map-only at 20k×141 cells)
+    center_rows = _kernel_center_rows(centers)
     if not center_rows:
         return (q.select(F.col("id").alias("query_id"),
                          F.col("id").alias("corpus_id"),
@@ -2003,39 +1828,6 @@ def with_hyperplane_bucket(df: DataFrame, vec_col: str,
             F.lit(0.0), lambda acc, v: acc + v)
         bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
     return df.withColumn(out_col, F.concat(*bits))
-
-
-def write_bucketed_index(df: DataFrame, path: str, id_col: str,
-                         vec_col: str = "embedding",
-                         plane_matrix: list[list[float]] | None = None,
-                         planes: int | None = None, dim: int = 64) -> None:
-    """Persist the LSH-bucketed ANN index with the bucket as the PHYSICAL
-    partition key (``partitionBy``) — the 100 TB layout behind SCALE.md's
-    'bucket is the partition key' claim: a probe filters on its bucket and
-    the scan prunes to that bucket's files alone (no shuffle, no full
-    scan). Int8 codes + scale ride along so candidate scoring reads 4×
-    less than full precision; full vectors stay for the final rerank.
-
-    ``planes=None`` (default) sizes the index from the corpus via
-    ``planes_for(df.count())`` — same round-7 default as
-    ``lsh_bucket_topk``; the plane count is recoverable from the written
-    layout (bucket strings' length), so probes stay consistent."""
-    pm = plane_matrix or deterministic_planes(
-        planes if planes is not None else planes_for(df.count()), dim)
-    base = df.select(F.col(id_col),
-                     F.col(vec_col).cast("array<double>").alias("v"))
-    b = with_hyperplane_bucket(base, "v", pm)
-    qz = quantize_embeddings(df, id_col, vec_col)
-    (b.join(qz, id_col)
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-
-
-def probe_bucketed_index(spark, path: str, bucket: str) -> DataFrame:
-    """Read one bucket of a ``write_bucketed_index`` layout. The bucket
-    equality predicate reaches the scan as a PartitionFilter, so only
-    ``bucket=<value>/`` files are listed/read — assert via
-    ``df.inputFiles()`` or the executed plan."""
-    return spark.read.parquet(path).where(F.col("bucket") == bucket)
 
 
 def quantize_embeddings(df: DataFrame, id_col: str,
@@ -2452,9 +2244,8 @@ def _pq_corpus_cols(df: DataFrame, vcol: str, codebooks: list,
     ds = len(codebooks[0][0]) if codebooks else 0
     CBS = [np.array(cb, dtype=np.float64) for cb in codebooks]
     if center_rows is not None:
-        C = np.array([c for _, c in center_rows], dtype=np.float64)
-        d_c = C.shape[1]
-        cells_arr = np.asarray([cell for cell, _ in center_rows])
+        d_c = len(center_rows[0][1])
+        nearest = _nearest_cells(center_rows)
     fields = [StructField(c, df.schema[c].dataType) for c in keep]
     if center_rows is not None:
         fields.append(StructField("cell", _cell_field_type(cell_type)))
@@ -2482,8 +2273,7 @@ def _pq_corpus_cols(df: DataFrame, vcol: str, codebooks: list,
                 res = g[keep].copy()
                 if center_rows is not None:
                     if L == d_c:
-                        d2 = _np_fold_sq_dists(V, C)
-                        res["cell"] = cells_arr[np.argmin(d2, axis=1)]
+                        res["cell"] = nearest(V)[0][:, 0]
                     else:
                         res["cell"] = None
                 if m == 0:
@@ -2535,11 +2325,9 @@ def _pq_probe_cols(df: DataFrame, vcol: str, codebooks: list,
     ds = len(codebooks[0][0]) if codebooks else 0
     kk = len(codebooks[0]) if codebooks else 0
     CBS = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    C = np.array([c for _, c in center_rows], dtype=np.float64)
-    d_c = C.shape[1]
-    cells_arr = np.asarray([cell for cell, _ in center_rows])
+    d_c = len(center_rows[0][1])
+    nearest = _nearest_cells(center_rows, n_probe)
     mm_cells = sorted(cell for cell, _ in center_rows)[:n_probe]
-    take = min(n_probe, len(center_rows))
     schema = StructType([
         StructField(id_col, df.schema[id_col].dataType),
         StructField("cell", _cell_field_type(cell_type)),
@@ -2563,12 +2351,8 @@ def _pq_probe_cols(df: DataFrame, vcol: str, codebooks: list,
                           else [None] * kk) for s in range(m)]
                         for i in range(len(g))]
                 if L == d_c:
-                    d2 = _np_fold_sq_dists(V, C)
-                    idx = np.lexsort(
-                        (np.broadcast_to(cells_arr, d2.shape), d2),
-                        axis=1)[:, :take]
-                    cells = cells_arr[idx]
-                    nrep = take
+                    cells = nearest(V)[0]
+                    nrep = cells.shape[1]
                 else:
                     cells = np.broadcast_to(
                         np.asarray(mm_cells, dtype=object),
@@ -2664,9 +2448,7 @@ def ivf_pq_topk(df: DataFrame, id_col: str, vec_col: str = "embedding",
     # sf1, ~2 s spread). The shuffle carries one slim row per vector.
     base = base.repartition(F.col("id"))
     if centers is not None:
-        center_rows = sorted(
-            (r["cell"], [float(x) for x in r["centroid"]])
-            for r in centers.select("cell", "centroid").collect())
+        center_rows = _kernel_center_rows(centers)
         if not center_rows:
             # an empty quantizer (e.g. kmeans_centers over a fully
             # invalid corpus) can prune nothing — no cells, no search
@@ -3101,12 +2883,9 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str = "embedding",
         cell_type = "long"        # what createDataFrame gave the old path
     else:
         # user-passed quantizer: a tiny (cell, centroid) frame by
-        # contract (persisted KMeans centers at production) — sorted so
-        # first-minimum == lowest cell, the documented tie-break
-        center_rows = sorted(
-            (r["cell"], [float(x) for x in r["centroid"]])
-            for r in centers.select("cell", "centroid").collect())
-        cell_type = centers.schema["cell"].dataType.simpleString()
+        # contract (persisted KMeans centers at production)
+        center_rows = _kernel_center_rows(centers)
+        cell_type = dict(centers.dtypes)["cell"]
     if n_probe > 1:
         # probed assignment: (id, v, rn, cell) with rn ∈ [1, n_probe];
         # the rn=1 slice is the primary assignment (identical rule and
@@ -3134,11 +2913,11 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str = "embedding",
             .select(F.col("id").alias(id_col), "cell"))
 
 
-# past this many centroid literals the argmin expression outgrows what
-# the analyzer/codegen handle comfortably — fall back to the broadcast
-# crossJoin + window assignment (same semantics, distributes at any k);
-# a corpus big enough to hit this passes persisted KMeans centers anyway
-_ASSIGN_LITERAL_BUDGET = 262_144
+# the nearest-cell search scores at most this many (row, center)
+# distances per numpy tile (8 MB of doubles): an Arrow batch against a
+# large quantizer is scored in row chunks, so per-task memory stays
+# bounded at any quantizer size
+_NEAREST_TILE_ELEMS = 1 << 20
 
 
 def _np_fold_sq_dists(V, C):
@@ -3170,6 +2949,43 @@ def _np_fold_dots(V, C):
     for i in range(C.shape[1]):
         acc = acc + V[:, i, None] * C[None, :, i]
     return acc
+
+
+def _nearest_cells(center_rows: list, n_probe: int = 1,
+                   sqrt_rank: bool = False):
+    """The nearest-cell search every assignment kernel shares, built on
+    the driver and shipped in the task closure: returns ``nearest(V)``
+    → ``(cells, keys)``, both B×take with take = min(n_probe, k) — per
+    row of ``V`` the nearest centers ranked (dist2 asc, cell asc) and
+    their rank keys (``_np_fold_sq_dists`` values, post-sqrt under
+    ``sqrt_rank``). ``center_rows`` is cell-sorted (the loader's
+    contract), so ``np.argmin``'s first minimum at take = 1 and the
+    ``np.lexsort`` ranking at take > 1 both break ties to the lowest
+    cell. A batch is scored ``_NEAREST_TILE_ELEMS // k`` rows at a
+    time, so the B×k distance tile stays bounded for any k; rows are
+    independent, so the chunking never changes a value."""
+    import numpy as np
+    C = np.array([c for _, c in center_rows], dtype=np.float64)
+    cells = np.asarray([cell for cell, _ in center_rows])
+    take = min(n_probe, len(center_rows))
+    chunk = max(1, _NEAREST_TILE_ELEMS // len(center_rows))
+
+    def nearest(V):
+        idx_parts, key_parts = [], []
+        for lo in range(0, V.shape[0], chunk):
+            d2 = _np_fold_sq_dists(V[lo:lo + chunk], C)
+            if sqrt_rank:
+                d2 = np.sqrt(d2)
+            if take == 1:
+                idx = np.argmin(d2, axis=1)[:, None]
+            else:
+                idx = np.lexsort((np.broadcast_to(cells, d2.shape), d2),
+                                 axis=1)[:, :take]
+            idx_parts.append(idx)
+            key_parts.append(np.take_along_axis(d2, idx, axis=1))
+        return cells[np.concatenate(idx_parts)], np.concatenate(key_parts)
+
+    return nearest
 
 
 def _cell_field_type(cell_type: str):
@@ -3221,7 +3037,7 @@ def _assign_cells(base: DataFrame, center_rows: list,
                   keep_dist2: bool = False) -> DataFrame:
     """Nearest-center cell assignment (squared euclidean; ties → lowest
     cell), the rule ``ivf_topk`` documents, as a MAP-ONLY vectorized
-    Arrow kernel (r15): no crossJoin row explosion (n·k rows), no
+    Arrow kernel (r15): no nested-loop row explosion (n·k rows), no
     per-id window shuffle — the quantizer ships in the task closure and
     the assignment rides the scan. Values are bit-identical to the r9
     literal-fold form (``_assign_cells_expr``): ``_np_fold_sq_dists``
@@ -3247,11 +3063,16 @@ def _assign_cells(base: DataFrame, center_rows: list,
 
     ``mismatch_cell="lowest"`` (r16 — the raw-index fusion, VERDICT r15
     #1): at ``n_probe = 1`` a length-mismatched vector gets the LOWEST
-    cell instead of NULL — the broadcast-crossJoin + per-id-window
+    cell instead of NULL — the broadcast nested-loop + per-id-window
     form's own rule (all-NULL dist2 sorts NULLS FIRST, ties break cell
-    asc), so the kernel is bit-identical to ``_assign_primary_cells``
-    on EVERY row class, ragged included (equality-pinned in
-    tests/test_pipeline_ops.py). ``n_probe > 1`` already implements it.
+    asc), so the kernel is bit-identical to that form on EVERY row
+    class, ragged included (equality-pinned against the window
+    reference in tests/test_pipeline_ops.py). ``n_probe > 1`` already
+    implements it.
+
+    An empty ``center_rows`` (an empty quantizer) yields the typed
+    empty frame; a quantizer of any size k runs the same kernel — the
+    distance tile is chunked by rows (``_nearest_cells``).
 
     ``sqrt_rank=True`` (r16): rank cells on ``sqrt(dist2)`` instead of
     ``dist2`` — for callers whose window form orders by euclidean
@@ -3264,7 +3085,7 @@ def _assign_cells(base: DataFrame, center_rows: list,
     ``keep_dist2=True`` (r16): also emit the rank key (``dist2``, the
     selected cell's fold value; post-sqrt under ``sqrt_rank``; NULL on
     length-mismatched rows — the window form's NULL-poisoned fold).
-    This is what lets a caller reproduce the crossJoin+window form's
+    This is what lets a caller reproduce the join + window form's
     DUPLICATE-ID rule with a window over the kernel's n-row OUTPUT
     instead of the n·k explosion: the window form partitions by id, so
     duplicate-id rows compete and only the globally best (dist2, cell)
@@ -3275,45 +3096,21 @@ def _assign_cells(base: DataFrame, center_rows: list,
     rows because any globally-ranked pair is ranked at least as high
     within its own row's candidate list."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
                                    StructField, StructType)
 
-    k_lits = len(center_rows) * (len(center_rows[0][1]) if center_rows else 0)
-    if k_lits > _ASSIGN_LITERAL_BUDGET:
-        # huge quantizers: the broadcast crossJoin + window form (same
-        # semantics for same-dimension vectors; a corpus big enough to
-        # hit this passes persisted KMeans centers anyway)
-        cent = F.broadcast(base.sparkSession.createDataFrame(
-            center_rows, ["cell", "centroid"]).select(
-                "cell", F.col("centroid").cast("array<double>").alias("centroid")))
-        cc = (base.crossJoin(cent)
-              .withColumn("dist2", F.aggregate(
-                  F.zip_with("v", "centroid", lambda a, b: (a - b) * (a - b)),
-                  F.lit(0.0), lambda acc, x: acc + x)))
-        rank_col = (F.sqrt(F.col("dist2")) if sqrt_rank
-                    else F.col("dist2"))
-        wc = Window.partitionBy("id").orderBy(rank_col.asc(),
-                                              F.col("cell").asc())
-        ranked = cc.withColumn("rn", F.row_number().over(wc))
-        extra = [rank_col.alias("dist2")] if keep_dist2 else []
-        if n_probe > 1:
-            return (ranked.where(F.col("rn") <= n_probe)
-                    .select("id", "v", "rn",
-                            F.col("cell").cast(cell_type).alias("cell"),
-                            *extra))
-        return (ranked.where(F.col("rn") == 1)
-                .select("id", "v",
-                        F.col("cell").cast(cell_type).alias("cell"),
-                        *extra))
-
-    cells_in_order = [cell for cell, _ in center_rows]
-    C = np.array([c for _, c in center_rows], dtype=np.float64)
-    d_c = C.shape[1]
-    cells_arr = np.asarray(cells_in_order)
+    if not center_rows:
+        # an empty quantizer assigns nothing: the typed empty frame
+        extra = [F.lit(1).alias("rn")] if n_probe > 1 else []
+        extra.append(F.lit(None).cast(cell_type).alias("cell"))
+        if keep_dist2:
+            extra.append(F.lit(None).cast("double").alias("dist2"))
+        return base.select("id", "v", *extra).where(F.lit(False))
+    d_c = len(center_rows[0][1])
     # mismatched-length rows rank cells ascending (NULL-dist2 tie rule)
-    mm_cells = sorted(cells_in_order)[:n_probe]
+    mm_cells = sorted(cell for cell, _ in center_rows)[:n_probe]
+    nearest = _nearest_cells(center_rows, n_probe, sqrt_rank)
     fields = [StructField("id", base.schema["id"].dataType),
               StructField("v", ArrayType(DoubleType()))]
     if n_probe > 1:
@@ -3322,7 +3119,6 @@ def _assign_cells(base: DataFrame, center_rows: list,
     if keep_dist2:
         fields.append(StructField("dist2", DoubleType()))
     schema = StructType(fields)
-    take = min(n_probe, len(cells_in_order))
 
     def assign(it):
         for pdf in it:
@@ -3344,34 +3140,22 @@ def _assign_cells(base: DataFrame, center_rows: list,
                     else:
                         out = g[["id", "v"]].copy()
                         out["cell"] = (mm_cells[0]
-                                       if mismatch_cell == "lowest"
-                                       and mm_cells else None)
+                                       if mismatch_cell == "lowest" else None)
                     if keep_dist2:
                         out["dist2"] = None   # the NULL-poisoned fold
                     yield out
                     continue
-                V = np.stack(g["v"].to_numpy())
-                d2 = _np_fold_sq_dists(V, C)
-                if sqrt_rank:
-                    d2 = np.sqrt(d2)
+                cells, keys = nearest(np.stack(g["v"].to_numpy()))
+                take = cells.shape[1]
                 if n_probe > 1:
-                    idx = np.lexsort(
-                        (np.broadcast_to(cells_arr, d2.shape), d2),
-                        axis=1)[:, :take]
                     out = g.loc[g.index.repeat(take), ["id", "v"]].copy()
                     out["rn"] = np.tile(np.arange(1, take + 1), len(g))
-                    out["cell"] = cells_arr[idx].ravel()
-                    if keep_dist2:
-                        out["dist2"] = np.take_along_axis(
-                            d2, idx, axis=1).ravel()
-                    yield out
                 else:
-                    win = np.argmin(d2, axis=1)
                     out = g[["id", "v"]].copy()
-                    out["cell"] = cells_arr[win]
-                    if keep_dist2:
-                        out["dist2"] = d2[np.arange(len(g)), win]
-                    yield out
+                out["cell"] = cells.ravel()
+                if keep_dist2:
+                    out["dist2"] = keys.ravel()
+                yield out
 
     return base.select("id", "v").mapInPandas(assign, schema=schema)
 

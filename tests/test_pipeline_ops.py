@@ -209,18 +209,6 @@ def test_multimodal_resize_and_frames(spark):
     assert [f["frame_ms"] for f in frames] == [0, 1000, 2000, 3000]
 
 
-def test_cosine_topk_vectorized_matches_exact(spark):
-    import random
-    rng = random.Random(3)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(40)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(4)
-    a = {(r["query_id"], r["corpus_id"]) for r in
-         S.cosine_topk(df, df, "vec_id", "vec_id", k=3).collect()}
-    b = {(r["query_id"], r["corpus_id"]) for r in
-         S.cosine_topk_vectorized(df, df, "vec_id", "vec_id", k=3).collect()}
-    assert a == b
-
-
 def test_cosine_topk_blocked_matches_exact(spark):
     """Distributed block matmul (collect-free) returns the identical exact
     top-k set, including string ids surviving the Arrow round-trip."""
@@ -476,7 +464,7 @@ def test_ivf_topk_recall(spark):
                          [c + rng.uniform(-0.5, 0.5) for c in center]))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(4)
     exact = {r["query_id"]: r["corpus_id"] for r in
-             S.cosine_topk_vectorized(df, df, "vec_id", "vec_id", k=1).collect()}
+             S.cosine_topk(df, df, "vec_id", "vec_id", k=1).collect()}
     ivf = {r["query_id"]: r["corpus_id"] for r in
            S.ivf_topk(df, df, "vec_id", "vec_id", k=1,
                       n_lists=4, n_probe=1).collect()}
@@ -759,29 +747,6 @@ def test_tokens_to_ids_invariant_under_repartition(spark):
                 for r in tokens_to_ids(df.repartition(7), "doc_id", "text",
                                        vocab).collect()}
     assert base == shuffled
-
-
-def test_bucketed_ann_index_partition_pruning(spark, tmp_path):
-    """SCALE.md's 'LSH bucket is the partition key' claim, demonstrated:
-    write the index partitionBy(bucket), probe one bucket, and assert the
-    bucket predicate reaches the scan as a PartitionFilter (pruned file
-    listing, not a full scan + filter)."""
-    from bda_spadochrony_spark.sources.readers import scan
-    emb = scan(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    path = str(tmp_path / "ann_index")
-    S.write_bucketed_index(emb, path, "vec_id", planes=4, dim=64)
-    some = spark.read.parquet(path).select("bucket").first()["bucket"]
-    probe = S.probe_bucketed_index(spark, path, some)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    scan_part = plan[plan.index("PartitionFilters"):]
-    assert scan_part[:300].count("bucket") >= 2, plan   # isnotnull + equality
-    assert f"= {some})" in scan_part[:300], plan
-    # the probe carries codes + full vectors for rerank, rows only from
-    # the probed bucket, and fewer rows than the whole index
-    got = probe.select("vec_id", "scale", "q", "v", "bucket")
-    n_all = spark.read.parquet(path).count()
-    assert 0 < got.count() < n_all
-    assert got.where(F.col("bucket") != some).count() == 0
 
 
 def test_build_vocab_prunes_before_global_rank(spark):
@@ -1988,41 +1953,49 @@ def test_semantic_dedup_empty_corpus_returns_empty_frame(spark):
     assert out.count() == 0
 
 
-def test_assign_cells_literal_budget_fallback_matches(spark, monkeypatch):
-    """r9 (VERDICT r8 #3): the >_ASSIGN_LITERAL_BUDGET broadcast-crossJoin
-    fallback must produce the IDENTICAL assignment as the literal argmin
-    path — the equivalence the docstring claims, pinned by forcing the
-    budget below the fixture's k·d. Checked for both the primary
-    (n_probe=1) and the probed (n_probe=2) variants, plus semantic_dedup
-    end-to-end."""
+def test_assign_cells_large_quantizer_matches_window_form(spark,
+                                                         monkeypatch):
+    """VERDICT r16 #4: a quantizer far past the old 262,144-literal
+    budget (k·d = 4,100·64) runs the one Arrow kernel, and the kernel
+    equals the crossJoin + window reference for n_probe 1 and 2 — with
+    the distance tile forced to 3 rows, so one Arrow batch is scored
+    in many row chunks. The ragged row takes the lowest cell(s) under
+    mismatch_cell="lowest" (the window's NULLS-FIRST rule) and NULL
+    under the default mode."""
     import random
-    rng = random.Random(11)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    base = df.select(F.col("vec_id").alias("id"),
-                     F.col("embedding").cast("array<double>").alias("v"))
-    centers = list(enumerate(r["v"] for r in
-                             base.orderBy("id").limit(5).collect()))
+    rng = random.Random(13)
+    k, d = 4100, 64
+    center_rows = [(c, [rng.uniform(-1, 1) for _ in range(d)])
+                   for c in range(k)]
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(50)]
+    rows.append((99, [0.5] * (d // 2)))                      # ragged
+    vecs = spark.createDataFrame(
+        rows, "corpus_id: long, cvec: array<double>").coalesce(1)
+    centers = spark.createDataFrame(
+        center_rows, "cell: long, centroid: array<double>")
+    ref = _assign_primary_cells(vecs, centers, "corpus_id",
+                                keep_dist2=True, n_probe=2).collect()
+    ref_1 = {(r["corpus_id"], r["cell"], r["dist2"])
+             for r in ref if r["rn"] == 1}
+    ref_2 = {(r["corpus_id"], r["rn"], r["cell"]) for r in ref}
+    assert (99, 0, None) in ref_1 and (99, 2, 1) in ref_2
 
-    lit_1 = {(r["id"], r["cell"]) for r in
-             S._assign_cells(base, centers).collect()}
-    lit_2 = {(r["id"], r["rn"], r["cell"]) for r in
-             S._assign_cells(base, centers, n_probe=2).collect()}
-    sd_lit = sorted((r["vec_id"], r["cell"]) for r in
-                    S.semantic_dedup(df, "vec_id", n_clusters=5,
-                                     min_cosine=0.8).collect())
-
-    monkeypatch.setattr(S, "_ASSIGN_LITERAL_BUDGET", 1)
-    fb_1 = {(r["id"], r["cell"]) for r in
-            S._assign_cells(base, centers).collect()}
-    fb_2 = {(r["id"], r["rn"], r["cell"]) for r in
-            S._assign_cells(base, centers, n_probe=2).collect()}
-    sd_fb = sorted((r["vec_id"], r["cell"]) for r in
-                   S.semantic_dedup(df, "vec_id", n_clusters=5,
-                                    min_cosine=0.8).collect())
-    assert fb_1 == lit_1
-    assert fb_2 == lit_2
-    assert sd_fb == sd_lit
+    monkeypatch.setattr(S, "_NEAREST_TILE_ELEMS", 3 * k)
+    base = vecs.select(F.col("corpus_id").alias("id"),
+                       F.col("cvec").alias("v"))
+    low = {(r["id"], r["cell"], r["dist2"]) for r in
+           S._assign_cells(base, center_rows, "bigint",
+                           mismatch_cell="lowest",
+                           keep_dist2=True).collect()}
+    assert low == ref_1
+    null = {(r["id"], r["cell"], r["dist2"]) for r in
+            S._assign_cells(base, center_rows, "bigint",
+                            keep_dist2=True).collect()}
+    assert null == (ref_1 - {(99, 0, None)}) | {(99, None, None)}
+    probed = {(r["id"], r["rn"], r["cell"]) for r in
+              S._assign_cells(base, center_rows, "bigint",
+                              n_probe=2).collect()}
+    assert probed == ref_2
 
 
 def test_semantic_dedup_ragged_vector_tolerated(spark):
@@ -2531,7 +2504,7 @@ def test_ivf_pq_kmeans_recall_vs_exact(spark):
     import random
 
     from bda_spadochrony_spark.operators.similarity import (
-        cosine_topk_vectorized, ivf_pq_topk, kmeans_centers)
+        cosine_topk, ivf_pq_topk, kmeans_centers)
     rng = random.Random(5)
     rows = []
     for cl in range(4):
@@ -2544,8 +2517,7 @@ def test_ivf_pq_kmeans_recall_vs_exact(spark):
                          [c + rng.uniform(-0.5, 0.5) for c in center]))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(4)
     exact = {r["query_id"]: r["corpus_id"] for r in
-             cosine_topk_vectorized(df, df, "vec_id", "vec_id",
-                                    k=1).collect()}
+             cosine_topk(df, df, "vec_id", "vec_id", k=1).collect()}
     centers = kmeans_centers(df, "embedding", n_cells=4, seed=42)
     assert centers.count() == 4
     # n_candidates = the cell size: the exact rerank then sees every
@@ -2873,9 +2845,35 @@ def test_apply_merges_kernel_matches_merge_fold(spark):
 # ---------------------------------------------------------------- r16 ------
 # The raw-layout streamed-index fusion (VERDICT r15 #1): the kernel's
 # mismatch_cell="lowest" mode must be bit-identical to the broadcast-
-# crossJoin + per-id-window form (_assign_primary_cells / the topk probe
-# window) on EVERY row class, ragged included — the window forms stay in
-# the code as the profiled-append path, so they double as the references.
+# crossJoin + per-id-window form (_assign_primary_cells below / the topk
+# probe window) on EVERY row class, ragged included. Every IVF operator
+# now assigns through the kernel alone; the window forms live here only
+# as the equality references.
+
+def _assign_primary_cells(vecs, centers, id_out, keep_dist2=False,
+                          n_probe=1):
+    """The broadcast crossJoin + per-id window form of nearest-center
+    assignment: squared euclidean, ties to the lower cell, a ragged
+    row's NULL-poisoned dist2 sorting first. Input ``vecs`` carries
+    (``id_out``, cvec); output adds ``cell`` (plus ``rn`` when
+    ``n_probe > 1`` and the rank key ``dist2`` with ``keep_dist2``)."""
+    from pyspark.sql import Window
+    cent = F.broadcast(centers.select(
+        F.col("cell"),
+        F.col("centroid").cast("array<double>").alias("centroid")))
+    cc = (vecs.crossJoin(cent)
+          .withColumn("dist2", F.aggregate(
+              F.zip_with("cvec", "centroid",
+                         lambda a, b: (a - b) * (a - b)),
+              F.lit(0.0), lambda acc, v: acc + v)))
+    w = Window.partitionBy(id_out).orderBy(F.col("dist2").asc(),
+                                           F.col("cell").asc())
+    cols = ([id_out, "cvec"] + (["rn"] if n_probe > 1 else []) + ["cell"]
+            + (["dist2"] if keep_dist2 else []))
+    return (cc.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= n_probe)
+            .select(*cols))
+
 
 def _r16_dup_fixture(spark):
     """_r15_fixture plus DUPLICATE-id rows with DIFFERENT vectors (the
@@ -2895,7 +2893,8 @@ def _r16_dup_fixture(spark):
 
 def test_assign_primary_cells_kernel_matches_window_form(spark):
     """The raw-append fusion (_assign_primary_cells_kernel) must be
-    bit-identical to _assign_primary_cells on every row class: unique
+    bit-identical to the _assign_primary_cells reference on every row
+    class: unique
     ids, exact ties, ragged rows (NULL dist2 sorts first, lowest cell
     wins), and DUPLICATE ids (one survivor per id, globally best
     (dist2, cell); a ragged duplicate beats a well-formed one)."""
@@ -2907,7 +2906,7 @@ def test_assign_primary_cells_kernel_matches_window_form(spark):
         r["cvec"] for r in vecs.orderBy("corpus_id").limit(7).collect()))
     centers = spark.createDataFrame(center_rows, ["cell", "centroid"])
     win = {(r["corpus_id"], tuple(r["cvec"]), r["cell"]) for r in
-           S._assign_primary_cells(vecs, centers, "corpus_id").collect()}
+           _assign_primary_cells(vecs, centers, "corpus_id").collect()}
     ker = {(r["corpus_id"], tuple(r["cvec"]), r["cell"]) for r in
            S._assign_primary_cells_kernel(vecs, center_rows,
                                           "bigint").collect()}
@@ -2974,26 +2973,58 @@ def test_probe_cells_kernel_matches_topk_window_form(spark):
     assert all(len(v) == 32 for i, v, c in ker.elements() if i == 900)
 
 
-def test_kernel_center_rows_degenerate_quantizers(spark):
-    """_kernel_center_rows must refuse every quantizer class whose
-    window-form semantics the numpy kernel cannot reproduce — NULL
-    cells/centroids/elements, non-finite elements, ragged lengths,
-    empty — and accept (sorted) a real one."""
-    ok = spark.createDataFrame(
-        [(1, [0.0, 1.0]), (0, [2.0, 3.0])], ["cell", "centroid"])
+_QUANTIZER_SCHEMA = "cell: long, centroid: array<double>"
+_BAD_QUANTIZERS = {
+    "null_cell": ([(0, [0.0] * 4), (None, [1.0] * 4)], "NULL cell"),
+    "null_centroid": ([(0, [0.0] * 4), (1, None)], "NULL centroid"),
+    "null_element": ([(0, [0.0] * 4), (1, [1.0, None, 1.0, 1.0])],
+                     "NULL centroid element"),
+    "nan_element": ([(0, [0.0] * 4), (1, [float("nan")] + [1.0] * 3)],
+                    "non-finite"),
+    "inf_element": ([(0, [0.0] * 4), (1, [float("inf")] + [1.0] * 3)],
+                    "non-finite"),
+    "mixed_lengths": ([(0, [0.0] * 4), (1, [1.0] * 3)], "mixed lengths"),
+}
+
+
+@pytest.mark.parametrize("case", [*_BAD_QUANTIZERS, "empty"])
+def test_kernel_center_rows_degenerate_quantizers(spark, tmp_path, case):
+    """_kernel_center_rows is the one quantizer loader: it sorts a real
+    quantizer by cell, returns [] for an empty one — every IVF family
+    then answers empty — and raises ValueError naming the fault for a
+    quantizer whose nearest-center rule is undefined, at the loader and
+    through one public entry per family (a NaN centroid used to send
+    ivf_pq_topk's corpus to the NaN cell while its probes ranked that
+    cell last)."""
+    ok = spark.createDataFrame([(1, [0.0, 1.0]), (0, [2.0, 3.0])],
+                               _QUANTIZER_SCHEMA)
     assert S._kernel_center_rows(ok) == [(0, [2.0, 3.0]), (1, [0.0, 1.0])]
-    bad = [
-        spark.createDataFrame([], "cell: long, centroid: array<double>"),
-        spark.createDataFrame([(None, [0.0])], "cell: long, centroid: array<double>"),
-        spark.createDataFrame([(0, None)], "cell: long, centroid: array<double>"),
-        spark.createDataFrame([(0, [0.0, None])], "cell: long, centroid: array<double>"),
-        spark.createDataFrame([(0, [float("nan")])], "cell: long, centroid: array<double>"),
-        spark.createDataFrame([(0, [float("inf")])], "cell: long, centroid: array<double>"),
-        spark.createDataFrame([(0, [0.0]), (1, [0.0, 1.0])],
-                              "cell: long, centroid: array<double>"),
-    ]
-    for b in bad:
-        assert S._kernel_center_rows(b) is None
+    df = spark.createDataFrame(
+        [(i, [float(i + 1), 1.0, float(i % 3), 2.0]) for i in range(8)],
+        "vec_id: long, embedding: array<double>")
+    entries = {
+        "ivf_topk": lambda c: S.ivf_topk(df, df, "vec_id", "vec_id", k=2,
+                                         n_probe=1, centers=c),
+        "ivf_pq_topk": lambda c: S.ivf_pq_topk(df, "vec_id", m=2,
+                                               codebook_k=4, centers=c),
+        "semantic_dedup": lambda c: S.semantic_dedup(df, "vec_id",
+                                                     centers=c),
+        "ann_index_topk": lambda c: S.ann_index_topk(
+            spark, str(tmp_path / "index"), df, "vec_id", centers=c),
+    }
+    if case == "empty":
+        empty = spark.createDataFrame([], _QUANTIZER_SCHEMA)
+        assert S._kernel_center_rows(empty) == []
+        for name, run in entries.items():
+            assert run(empty).count() == 0, name
+        return
+    rows, fault = _BAD_QUANTIZERS[case]
+    bad = spark.createDataFrame(rows, _QUANTIZER_SCHEMA)
+    with pytest.raises(ValueError, match=fault):
+        S._kernel_center_rows(bad)
+    for name, run in entries.items():
+        with pytest.raises(ValueError, match=fault):
+            run(bad)
 
 
 # The int8 candidate-stage tile (VERDICT r15 #5): _int8_tile_topk must

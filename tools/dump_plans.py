@@ -183,12 +183,6 @@ def main() -> None:
         "  bucket+quantize / fingerprint frames are localCheckpoint'd before",
         "  their self-joins, same rationale as minhash — A/B at sf0.1: warm",
         "  4.0→2.4 s and 2.4→1.7 s respectively.",
-        "- ANN bucket-as-partition-key, demonstrated (round 5):",
-        "  `similarity.write_bucketed_index` persists the LSH index",
-        "  `partitionBy(bucket)` with int8 codes riding along;",
-        "  `probe_bucketed_index`'s executed plan carries the bucket equality",
-        "  as a `PartitionFilters` entry (pruned file listing, not scan+filter)",
-        "  — `test_bucketed_ann_index_partition_pruning`.",
         "- `heavy_hitters` (round 5) shows a truncated lineage for the same",
         "  checkpoint reason as minhash: the p*(k+1)-row Misra-Gries summary",
         "  feeds both the exact-N aggregate and the candidate broadcast, so it",
