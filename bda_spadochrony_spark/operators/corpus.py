@@ -842,10 +842,19 @@ def quality_gate(df: DataFrame, id_col: str, text_col: str,
     SQL oracle); the plan is the union of the two underlying operators'
     plans plus one id-keyed join.
     """
+    return _gate_verdict(df, unigram_surprisal(df, id_col, text_col),
+                         id_col, text_col, min_tokens, max_dup3,
+                         max_top_token, surprisal_lo, surprisal_hi)
+
+
+def _gate_verdict(df: DataFrame, sur: DataFrame, id_col: str, text_col: str,
+                  min_tokens: int, max_dup3: float, max_top_token: float,
+                  surprisal_lo: float, surprisal_hi: float) -> DataFrame:
+    """``quality_gate``'s verdict over ``df``'s repetition features and a
+    prebuilt ``unigram_surprisal`` frame ``sur`` of the same corpus."""
     from bda_spadochrony_spark.operators.text import repetition_features
     rep = repetition_features(df.select(F.col(id_col), F.col(text_col)),
                               id_col, text_col)
-    sur = unigram_surprisal(df, id_col, text_col)
     j = rep.join(sur.select(F.col(id_col),
                             F.col("surprisal")), id_col, "left")
     s = F.coalesce("surprisal", F.lit(0.0))
@@ -880,7 +889,14 @@ def surprisal_band(df: DataFrame, id_col: str, text_col: str,
     Calibration is a FIT step (like centroid fitting or plane sizing):
     one extra aggregate over the surprisal frame, driver sees 2 floats.
     """
-    sur = unigram_surprisal(df, id_col, text_col)
+    return _surprisal_percentiles(unigram_surprisal(df, id_col, text_col),
+                                  lo_q, hi_q, round_digits)
+
+
+def _surprisal_percentiles(sur: DataFrame, lo_q: float, hi_q: float,
+                           round_digits: int = 4) -> tuple[float, float]:
+    """``surprisal_band``'s fit over a prebuilt ``unigram_surprisal``
+    frame: one aggregate action, the driver sees 2 floats."""
     row = sur.agg(
         F.expr(f"percentile(surprisal, {lo_q})").alias("lo"),
         F.expr(f"percentile(surprisal, {hi_q})").alias("hi")).collect()[0]

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ByteType, DateType, IntegerType, LongType,
+                               ShortType, StringType)
 
 from bda_spadochrony_spark.functions.numeric import stable_round
 
@@ -683,31 +685,43 @@ def sketch_incremental_dedup(new_sketch: DataFrame,
                     .otherwise(0).alias("admitted")))
 
 
-def _min_label_propagation(pairs: DataFrame, id_a: str, id_b: str,
-                           max_iter: int) -> tuple[DataFrame, int]:
-    """Minimum-label propagation: every round each node adopts
-    min(own label, neighbors' labels). One shuffle-join per round;
-    converges in O(component diameter) rounds. Returns (labels, rounds)."""
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    sym = edges.union(edges.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-    labels = (edges.select(F.col("src").alias("id"))
-              .union(edges.select("dst")).distinct()
-              .withColumn("label", F.col("id")))
-    for rounds in range(1, max_iter + 1):
-        nbr = (sym.join(labels, sym.dst == labels.id)
-               .groupBy("src").agg(F.min("label").alias("nbr_min")))
-        merged = (labels.join(nbr, labels.id == nbr.src, "left")
-                  .select(labels.id.alias("id"),
-                          F.col("label").alias("old_label"),
-                          F.least(F.col("label"),
-                                  F.coalesce("nbr_min", F.col("label")))
-                          .alias("label")))
-        merged = merged.localCheckpoint(eager=True)  # cut lineage per round
-        labels = merged
-        if merged.where(F.col("label") != F.col("old_label")).isEmpty():
-            return labels.select("id", F.col("label").alias("canonical_id")), rounds
-    return None, max_iter  # non-converged sentinel — caller raises
+# a duplicate graph with at most this many distinct edges is resolved in
+# driver memory (at 1 << 16 edges: ~1 MB of 8-byte ids, a few MB as
+# Python objects) instead of by distributed star contraction — for id
+# types whose Python equality and order are Spark's (float NaN/-0.0,
+# binary and collated strings are not, so those graphs always take star
+# contraction)
+_LOCAL_EDGE_LIMIT = 1 << 16
+_LOCAL_ID_TYPES = (ByteType(), ShortType(), IntegerType(), LongType(),
+                   StringType(), DateType())
+
+
+def _local_components(edges: DataFrame) -> DataFrame:
+    """Connected components of a small canonical ``(lo, hi)`` edge set,
+    found in driver memory: one collect, then union-find with the
+    smaller root kept, so every node ends on its component minimum.
+    Returns ``_star_contraction``'s converged labels — ``(id,
+    canonical_id)`` for every non-root node — typed as the edge schema,
+    as an Arrow-built local relation (no Python worker reads it back)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for lo, hi in edges.collect():
+        a, b = find(lo), find(hi)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    moved = [(x, find(x)) for x in parent if find(x) != x]
+    id_type = to_arrow_type(edges.schema["lo"].dataType)
+    return edges.sparkSession.createDataFrame(pa.table({
+        "id": pa.array([x for x, _ in moved], id_type),
+        "canonical_id": pa.array([m for _, m in moved], id_type)}))
 
 
 def _star_contraction(pairs: DataFrame, id_a: str, id_b: str,
@@ -722,10 +736,15 @@ def _star_contraction(pairs: DataFrame, id_a: str, id_b: str,
       emit (x, m) for x ∈ N(u) ∪ {u}, x ≠ m;
 
     until the edge set is stable. Converges in O(log n) rounds — the
-    scale answer for chain-shaped near-dup graphs where propagation's
-    O(diameter) stalls. Each half-round is one groupBy + one join on node
-    id, the same shuffle primitive as propagation. At convergence every
-    non-root node holds exactly one edge to its component minimum.
+    scale answer for chain-shaped near-dup graphs where min-label
+    propagation's O(diameter) stalls. Each half-round is one groupBy +
+    one join on node id. At convergence every non-root node holds exactly
+    one edge to its component minimum.
+
+    An edge set of at most ``_LOCAL_EDGE_LIMIT`` rows, with ids of a
+    ``_LOCAL_ID_TYPES`` type, skips the rounds: it is collected and
+    finished by ``_local_components`` (same labels, 0 rounds) — the
+    per-round jobs, not the data, are the cost there.
     Returns (labels-for-edge-nodes, rounds); roots are re-attached by the
     caller.
     """
@@ -747,6 +766,9 @@ def _star_contraction(pairs: DataFrame, id_a: str, id_b: str,
         return r["n"], r["h"]
 
     sig_edges = signature(edges)
+    if (sig_edges[0] <= _LOCAL_EDGE_LIMIT
+            and edges.schema["lo"].dataType in _LOCAL_ID_TYPES):
+        return _local_components(edges), 0
     for rounds in range(1, max_iter + 1):
         # -- large-star: u's neighborhood from BOTH orientations
         sym = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")) \
@@ -771,9 +793,9 @@ def _star_contraction(pairs: DataFrame, id_a: str, id_b: str,
                   .where(F.col("lo") != F.col("m"))
                   .select(F.col("m").alias("lo"), F.col("lo").alias("hi")))
         self_link = mins_s.select(F.col("m").alias("lo"), "hi")
-        # LAZY checkpoint: the signature aggregate is the round's only
-        # action, and its first pass materializes the checkpoint as a
-        # side effect — one job per round where eager + count was two
+        # under AQE this call runs every shuffle stage above it; the
+        # signature aggregate then runs the final stage and fills the
+        # checkpoint as a side effect
         small = relink.union(self_link).distinct().localCheckpoint(eager=False)
         sig_small = signature(small)
         # both sides are DISTINCT sets: equal signature + one-direction
@@ -786,16 +808,14 @@ def _star_contraction(pairs: DataFrame, id_a: str, id_b: str,
 
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                   max_iter: int = 20,
-                   algorithm: str = "star") -> DataFrame:
+                   max_iter: int = 20) -> DataFrame:
     """Connected components over near-duplicate PAIRS → one canonical id
     (the component minimum) per member — the step that turns pairwise
     near-dup output into keep/drop decisions for a corpus.
 
-    ``algorithm="star"`` (default) runs large-star/small-star contraction,
-    O(log n) rounds — the 100 TB path. ``algorithm="propagation"`` runs
-    plain min-label propagation, O(diameter) rounds — kept as the simple
-    twin for small/star-shaped graphs. Both produce identical output.
+    Large-star/small-star contraction, O(log n) rounds — the 100 TB
+    path; a graph small enough for driver memory is finished there in
+    one collect (``_star_contraction``).
 
     Raises ValueError if the round budget is exhausted before convergence
     (a silent partial result would hand back multiple canonical ids for
@@ -803,28 +823,21 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
 
     Returns (id, canonical_id) for every node that appears in ``pairs``.
     """
-    if algorithm == "propagation":
-        labels, _ = _min_label_propagation(pairs, id_a, id_b, max_iter)
-    elif algorithm == "star":
-        star_labels, _ = _star_contraction(pairs, id_a, id_b, max_iter)
-        if star_labels is None:
-            labels = None
-        else:
-            # star labels cover non-root edge nodes; re-attach roots and
-            # any self-pair-only nodes with canonical = self
-            nodes = (pairs.select(F.col(id_a).alias("id"))
-                     .union(pairs.select(F.col(id_b).alias("id"))).distinct())
-            labels = (nodes.join(star_labels, "id", "left")
-                      .select("id", F.coalesce("canonical_id", "id")
-                              .alias("canonical_id")))
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    if labels is None:
+    # read three times (the edge set, both sides of the node list) and
+    # often a similarity self-join — checkpoint or each read re-runs it
+    pairs = pairs.select(id_a, id_b).localCheckpoint(eager=False)
+    star_labels, _ = _star_contraction(pairs, id_a, id_b, max_iter)
+    if star_labels is None:
         raise ValueError(
             f"dedup_clusters did not converge within max_iter={max_iter} "
-            f"rounds ({algorithm}) — raise max_iter, or use "
-            f"algorithm='star' for chain-shaped components")
-    return labels
+            f"rounds — raise max_iter")
+    # star labels cover non-root edge nodes; re-attach roots and any
+    # self-pair-only nodes with canonical = self
+    nodes = (pairs.select(F.col(id_a).alias("id"))
+             .union(pairs.select(F.col(id_b).alias("id"))).distinct())
+    return (nodes.join(star_labels, "id", "left")
+            .select("id", F.coalesce("canonical_id", "id")
+                    .alias("canonical_id")))
 
 
 # -------------------------------------------------------------- simhash ---

@@ -153,11 +153,11 @@ def corpus_pipeline(docs: DataFrame, id_col: str = "doc_id",
                     band_quantiles: tuple[float, float] = (0.1, 0.9),
                     contamination_max: float = 0.05, bench_mod: int = 97,
                     budget: int = 512, num_shards: int = 8) -> DataFrame:
-    """The end-to-end training-corpus pipeline as ONE lazy plan —
-    normalize → quality gate → digest-windowed exact dedup → 3-gram
-    benchmark decontamination → language-mixture rebalance →
-    shuffled-epoch sequence packing, composed from the engine's stage
-    operators with no driver round-trips between stages (the
+    """The end-to-end training-corpus pipeline — normalize → quality
+    gate → digest-windowed exact dedup → 3-gram benchmark
+    decontamination → language-mixture rebalance → shuffled-epoch
+    sequence packing, composed from the engine's stage operators with
+    checkpoints, not collects, between stages (the
     ``corpus_pipeline`` contract query runs this with the default
     fixed thresholds; its oracle chains the stage oracles as CTEs).
 
@@ -166,19 +166,26 @@ def corpus_pipeline(docs: DataFrame, id_col: str = "doc_id",
     distribution — the production configuration (a fixed band tuned on
     one corpus drops 100% of a different-vocabulary corpus; measured at
     the 10× Zipfian fixture, BENCH_SF1). Calibration is a fit step: one
-    extra aggregate action before the lazy plan is assembled.
+    aggregate action over the same surprisal frame the gate consumes.
 
-    The two frames consumed by multiple stages (the normalized corpus;
-    the mixture survivors) are lazily checkpointed — the frames a
-    production pipeline materializes between stages — so lineage does
-    not re-run upstream stages per consumer. Exchange count is bounded
-    (PLANS.md): every shuffle is keyed on a digest, the language, or
-    the shard, never on raw text or pairs.
+    Checkpointed — the frames a production pipeline materializes
+    between stages: the normalized corpus (three consumers), the
+    surprisal scores when calibrating (the band and the gate), the
+    gate's kept ids and the decontaminated survivors (``contamination``
+    reads the deduplicated corpus twice and ``mixture_sample`` reads the
+    survivors twice, so without a cut each read re-plans and re-runs the
+    whole tree above it), and the mixture survivors (packing and the
+    final join). Under AQE, ``localCheckpoint(eager=False)`` runs every
+    upstream shuffle stage when it is called; only the final stage waits
+    for the first action. Exchange count is bounded (PLANS.md): every
+    shuffle is keyed on a digest, the language, or the shard, never on
+    raw text or pairs.
     """
-    from bda_spadochrony_spark.operators.corpus import (contamination,
+    from bda_spadochrony_spark.operators.corpus import (_gate_verdict,
+                                                        _surprisal_percentiles,
+                                                        contamination,
                                                         pack_documents,
-                                                        quality_gate,
-                                                        surprisal_band)
+                                                        unigram_surprisal)
     from bda_spadochrony_spark.operators.sampling import (hash_bucket,
                                                           mixture_sample)
     from bda_spadochrony_spark.operators.text import normalize_text
@@ -189,23 +196,25 @@ def corpus_pipeline(docs: DataFrame, id_col: str = "doc_id",
     norm = (docs.select(F.col(id_col), F.col(lang_col),
                         normalize_text(text_col).alias("ntext"))
             .localCheckpoint(eager=False))
+    sur = unigram_surprisal(norm, id_col, "ntext")
     if calibrate_surprisal:
-        surprisal_lo, surprisal_hi = surprisal_band(
-            norm, id_col, "ntext", *band_quantiles)
-    gate = quality_gate(norm, id_col, "ntext", min_tokens=min_tokens,
-                        max_dup3=max_dup3, max_top_token=max_top_token,
-                        surprisal_lo=surprisal_lo,
-                        surprisal_hi=surprisal_hi)
-    kept = norm.join(gate.where(F.col("keep") == 1).select(id_col),
-                     id_col, "left_semi")
+        sur = sur.localCheckpoint(eager=False)   # the band and the gate
+        surprisal_lo, surprisal_hi = _surprisal_percentiles(
+            sur, *band_quantiles)
+    gate = (_gate_verdict(norm, sur, id_col, "ntext", min_tokens, max_dup3,
+                          max_top_token, surprisal_lo, surprisal_hi)
+            .where(F.col("keep") == 1).select(id_col)
+            .localCheckpoint(eager=False))
+    kept = norm.join(gate, id_col, "left_semi")
     wd = Window.partitionBy(F.xxhash64("ntext")).orderBy(id_col)
     uniq = (kept.withColumn("__rn", F.row_number().over(wd))
             .where(F.col("__rn") == 1).drop("__rn"))
     bench = norm.where(F.col(id_col) % bench_mod == 0)
     corp = uniq.where(F.col(id_col) % bench_mod != 0)
     cont = contamination(corp, bench, id_col, "ntext", shingle_n=3)
-    clean = corp.join(cont.where(F.col("contamination") <= contamination_max)
-                      .select(id_col), id_col, "left_semi")
+    clean = (corp.join(cont.where(F.col("contamination") <= contamination_max)
+                       .select(id_col), id_col, "left_semi")
+             .localCheckpoint(eager=False))
     mixed = (mixture_sample(clean, id_col, lang_col, targets)
              .localCheckpoint(eager=False))
     packed = pack_documents(mixed, id_col, "ntext", budget=budget,

@@ -958,6 +958,63 @@ def test_edge_duplicate_keys_parity(spark, edge_dup_dir, edge_dup_duck,
                                 name=f"edge-dup:{name}")
 
 
+def _corpus_pipeline_composed(docs, **gate):
+    """``corpus_pipeline(calibrate_surprisal=True)`` rebuilt from the
+    public stage operators, each stage planned from scratch: the band
+    from ``surprisal_band``, the verdict from ``quality_gate``, no
+    checkpoint between stages."""
+    from pyspark.sql import Window, functions as F
+    from bda_spadochrony_spark.operators.corpus import (contamination,
+                                                        pack_documents,
+                                                        quality_gate,
+                                                        surprisal_band)
+    from bda_spadochrony_spark.operators.sampling import (hash_bucket,
+                                                          mixture_sample)
+    from bda_spadochrony_spark.operators.text import normalize_text
+    norm = docs.select("doc_id", "lang", normalize_text("text").alias("ntext"))
+    lo, hi = surprisal_band(norm, "doc_id", "ntext")
+    verdict = quality_gate(norm, "doc_id", "ntext", surprisal_lo=lo,
+                           surprisal_hi=hi, **gate)
+    kept = norm.join(verdict.where(F.col("keep") == 1).select("doc_id"),
+                     "doc_id", "left_semi")
+    wd = Window.partitionBy(F.xxhash64("ntext")).orderBy("doc_id")
+    uniq = (kept.withColumn("__rn", F.row_number().over(wd))
+            .where(F.col("__rn") == 1).drop("__rn"))
+    bench = norm.where(F.col("doc_id") % 97 == 0)
+    corp = uniq.where(F.col("doc_id") % 97 != 0)
+    cont = contamination(corp, bench, "doc_id", "ntext", shingle_n=3)
+    clean = corp.join(cont.where(F.col("contamination") <= 0.05)
+                      .select("doc_id"), "doc_id", "left_semi")
+    mixed = mixture_sample(clean, "doc_id", "lang",
+                           {"en": 0.5, "de": 0.125, "fr": 0.125,
+                            "es": 0.125, "zh": 0.125})
+    packed = pack_documents(mixed, "doc_id", "ntext", budget=512,
+                            num_shards=8, order_col=hash_bucket("doc_id"))
+    return (packed.join(mixed.select("doc_id", "lang"), "doc_id")
+            .select("doc_id", "lang", "shard", "n_tokens",
+                    hash_bucket("doc_id").alias("shuffle_key"),
+                    "pack_id", "pack_offset"))
+
+
+@pytest.mark.parametrize("fixture", ["edge_dir", "edge_dup_dir"])
+def test_corpus_pipeline_calibrated_matches_stage_composition(
+        spark, request, fixture):
+    """The pipeline's shared surprisal pass and inter-stage checkpoints
+    change no row: ``corpus_pipeline(calibrate_surprisal=True)`` equals
+    the same stages composed from the public operators. The gate's other
+    rules are opened up so the surprisal band decides, and the result is
+    non-empty on both fixtures."""
+    from bda_spadochrony_spark.plans.pipelines import corpus_pipeline
+    docs = spark.read.parquet(
+        os.path.join(request.getfixturevalue(fixture), "documents.parquet"))
+    gate = dict(min_tokens=1, max_dup3=1.0, max_top_token=1.0)
+    got = corpus_pipeline(docs, calibrate_surprisal=True, **gate)
+    want = _corpus_pipeline_composed(docs, **gate)
+    assert got.dtypes == want.dtypes
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows and rows == sorted(tuple(r) for r in want.collect())
+
+
 def test_duplicate_key_boundary_documented(spark, edge_dup_dir):
     """The five key-uniqueness-precondition queries stay DETERMINISTIC
     and sane on the Spark side under exact-copy duplicates — the

@@ -502,9 +502,36 @@ def test_pairwise_cosine_blocked_matches_bruteforce(spark):
     assert got == want
 
 
+def _min_label_propagation(pairs, id_a, id_b, max_iter):
+    """Equality reference for ``dedup_clusters``: minimum-label
+    propagation — every round each node adopts min(own label, neighbors'
+    labels); converges in O(component diameter) rounds. Returns
+    ((id, canonical_id) labels for every node in ``pairs``, rounds), or
+    (None, max_iter) if the budget runs out."""
+    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    sym = edges.union(edges.select(F.col("dst").alias("src"),
+                                   F.col("src").alias("dst")))
+    labels = (edges.select(F.col("src").alias("id"))
+              .union(edges.select("dst")).distinct()
+              .withColumn("label", F.col("id")))
+    for rounds in range(1, max_iter + 1):
+        nbr = (sym.join(labels, sym.dst == labels.id)
+               .groupBy("src").agg(F.min("label").alias("nbr_min")))
+        merged = (labels.join(nbr, labels.id == nbr.src, "left")
+                  .select(labels.id.alias("id"),
+                          F.col("label").alias("old_label"),
+                          F.least(F.col("label"),
+                                  F.coalesce("nbr_min", F.col("label")))
+                          .alias("label")))
+        labels = merged.localCheckpoint(eager=True)  # cut lineage per round
+        if labels.where(F.col("label") != F.col("old_label")).isEmpty():
+            return labels.select("id", F.col("label").alias("canonical_id")), rounds
+    return None, max_iter
+
+
 def test_dedup_clusters_chain_and_islands(spark):
-    """Min-label propagation: a 4-node chain (worst diameter) collapses to
-    one canonical id; disjoint pairs stay separate components."""
+    """A 4-node chain (worst diameter) collapses to one canonical id;
+    disjoint pairs stay separate components."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4),      # chain 1-2-3-4
          (10, 11),                    # island
@@ -517,32 +544,91 @@ def test_dedup_clusters_chain_and_islands(spark):
                    20: 20, 21: 20, 22: 20}
 
 
-def test_dedup_clusters_raises_on_nonconvergence(spark):
+def test_dedup_clusters_raises_on_nonconvergence(spark, monkeypatch):
     """A component whose diameter exceeds the round budget must fail loudly
     — partial propagation would yield multiple canonical ids for one
-    component, which is silent data corruption for a dedup pipeline."""
-    import pytest
+    component, which is silent data corruption for a dedup pipeline.
+    The in-memory finish cannot run out of rounds, so the edge limit is
+    forced to 0 to run star contraction."""
+    monkeypatch.setattr(D, "_LOCAL_EDGE_LIMIT", 0)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], ["id_a", "id_b"])
     with pytest.raises(ValueError, match="did not converge"):
         D.dedup_clusters(pairs, max_iter=1)
 
 
-def test_star_contraction_matches_propagation_fewer_rounds(spark):
+def test_star_contraction_matches_propagation_fewer_rounds(spark, monkeypatch):
     """Large-star/small-star converges in O(log n) rounds on a chain —
-    the worst case for O(diameter) propagation — with identical output."""
+    the worst case for O(diameter) propagation — with identical output.
+    The edge limit is forced to 0 so the rounds counted are star's."""
+    monkeypatch.setattr(D, "_LOCAL_EDGE_LIMIT", 0)
     n = 17
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, n)],
                                   ["id_a", "id_b"])
     _, star_rounds = D._star_contraction(pairs, "id_a", "id_b", 40)
-    _, prop_rounds = D._min_label_propagation(pairs, "id_a", "id_b", 40)
+    prop_labels, prop_rounds = _min_label_propagation(pairs, "id_a", "id_b", 40)
     assert star_rounds < prop_rounds, (star_rounds, prop_rounds)
 
     star = {r["id"]: r["canonical_id"]
-            for r in D.dedup_clusters(pairs, algorithm="star").collect()}
-    prop = {r["id"]: r["canonical_id"]
-            for r in D.dedup_clusters(pairs, algorithm="propagation").collect()}
+            for r in D.dedup_clusters(pairs).collect()}
+    prop = {r["id"]: r["canonical_id"] for r in prop_labels.collect()}
     assert star == prop == {i: 1 for i in range(1, n + 1)}
+
+
+def _cc_graphs():
+    """Adversarial duplicate graphs: (name, ddl, pairs)."""
+    # 40 nodes 40-39-…-21-1-2-…-20: the minimum sits mid-chain, so the
+    # propagation reference needs 20 rounds rather than 39
+    path = list(range(40, 20, -1)) + list(range(1, 21))
+    chain = list(zip(path, path[1:]))
+    hub = [(100, 100 + i) for i in range(1, 31)]
+    dup_rev = [(5, 3), (3, 5), (3, 5), (7, 5), (5, 7), (9, 8)]
+    loops = [(1, 1), (2, 2), (2, 3), (4, 4), (3, 4)]
+    nulls = [(1, None), (None, 2), (None, None), (3, 4), (4, None)]
+    islands = [(1, 2), (30, 31), (31, 32), (60, 61)]
+    return [
+        ("chain40", "id_a: int, id_b: int", chain),
+        ("hub30", "id_a: bigint, id_b: bigint", hub),
+        ("dup_reversed", "id_a: bigint, id_b: bigint", dup_rev),
+        ("self_loops", "id_a: int, id_b: int", loops),
+        ("null_ids", "id_a: bigint, id_b: bigint", nulls),
+        ("islands3", "id_a: int, id_b: int", islands),
+        ("empty", "id_a: bigint, id_b: bigint", []),
+        ("string_chain", "id_a: string, id_b: string",
+         [(f"d{i:02d}", f"d{i + 1:02d}") for i in range(6)]
+         + [("z", "y"), ("y", "x"), ("q", "q")]),
+        ("string_nulls", "id_a: string, id_b: string",
+         [("b", "a"), ("a", None), (None, None), ("c", "b")]),
+        # not an in-memory id type: both settings run star contraction
+        ("double_ids", "id_a: double, id_b: double",
+         [(2.5, 1.5), (1.5, 0.5), (7.0, 8.0)]),
+    ]
+
+
+@pytest.mark.parametrize("graph", _cc_graphs(), ids=lambda g: g[0])
+def test_dedup_clusters_local_finish_matches_star(spark, monkeypatch, graph):
+    """The in-memory finish (default edge limit) and star contraction
+    (limit forced to 0) give identical labels, with identical types, and
+    both equal the min-label propagation reference."""
+    _, ddl, rows = graph
+    pairs = spark.createDataFrame(rows, ddl)
+
+    def labels():
+        out = D.dedup_clusters(pairs)
+        return out.dtypes, sorted(
+            (tuple(r) for r in out.collect()),
+            key=lambda t: tuple((v is None, str(v)) for v in t))
+
+    local = labels()
+    monkeypatch.setattr(D, "_LOCAL_EDGE_LIMIT", 0)
+    star = labels()
+    assert local == star
+    ref, _ = _min_label_propagation(pairs, "id_a", "id_b", 60)
+    want = sorted((tuple(r) for r in ref.collect()),
+                  key=lambda t: tuple((v is None, str(v)) for v in t))
+    assert local[1] == want
+    id_type = dict(pairs.dtypes)["id_a"]
+    assert local[0] == [("id", id_type), ("canonical_id", id_type)]
 
 
 # ------------------------------------------------- deterministic sampling --
