@@ -859,9 +859,8 @@ def q_embedding_ann_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness scale (``_oracle_embedding_count``), so both engines
     bucket identically."""
     from bda_spadochrony_spark.operators.similarity import (
-        INT8_TILE_MIN_BUCKET, _int8_tile_topk, deterministic_planes,
-        planes_for, quantize_embeddings, valid_vectors,
-        with_hyperplane_bucket)
+        deterministic_planes, planes_for, quantize_embeddings,
+        valid_vectors, with_hyperplane_bucket)
     from pyspark.sql import Window
     emb = _t(spark, sf_dir, "embeddings")
     n_vec = emb.count()
@@ -885,35 +884,24 @@ def q_embedding_ann_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projections + quantization (the same failure minhash_dedup fixes —
     # dedup.py). One row per vector (codes + norm) — tiny at any scale.
     d = d.localCheckpoint(eager=False)
-    if (n_vec >> len(pm)) >= INT8_TILE_MIN_BUCKET:
-        # big-bucket regime (r16, VERDICT r15 #5): once planes_for's
-        # max_planes cap binds (n > 2^24·8 ≈ 134M vectors — the 100 TB
-        # shape), expected occupancy n/2^planes grows unboundedly and
-        # the interpreted per-PAIR fold below pays n·occupancy rows
-        # through the join; the per-bucket int64 Gram tile pays one
-        # matmul per bucket. Value-identical to the join+window form
-        # (see _int8_tile_topk's equality argument + the pinned test);
-        # crossover measured at tools/bench_ann_stack_buckets.py.
-        cand = _int8_tile_topk(d, 10)
-    else:
-        a = d.select(F.col("vec_id").alias("query_id"),
-                     F.col("v").alias("qv"),
-                     F.col("q").alias("qa"), F.col("qn").alias("qna"),
-                     "bucket")
-        b = d.select(F.col("vec_id").alias("corpus_id"),
-                     F.col("v").alias("cv"),
-                     F.col("q").alias("qb"), F.col("qn").alias("qnb"),
-                     "bucket")
-        pairs = (a.join(b, "bucket")
-                 .where((F.col("query_id") != F.col("corpus_id")) &
-                        (F.col("qna") > 0) & (F.col("qnb") > 0))
-                 .withColumn("approx",
-                             idot(F.col("qa"), F.col("qb")).cast("double") /
-                             (F.col("qna") * F.col("qnb"))))
-        w1 = Window.partitionBy("query_id").orderBy(F.col("approx").desc(),
-                                                    F.col("corpus_id").asc())
-        cand = (pairs.withColumn("rn", F.row_number().over(w1))
-                .where(F.col("rn") <= 10))
+    a = d.select(F.col("vec_id").alias("query_id"),
+                 F.col("v").alias("qv"),
+                 F.col("q").alias("qa"), F.col("qn").alias("qna"),
+                 "bucket")
+    b = d.select(F.col("vec_id").alias("corpus_id"),
+                 F.col("v").alias("cv"),
+                 F.col("q").alias("qb"), F.col("qn").alias("qnb"),
+                 "bucket")
+    pairs = (a.join(b, "bucket")
+             .where((F.col("query_id") != F.col("corpus_id")) &
+                    (F.col("qna") > 0) & (F.col("qnb") > 0))
+             .withColumn("approx",
+                         idot(F.col("qa"), F.col("qb")).cast("double") /
+                         (F.col("qna") * F.col("qnb"))))
+    w1 = Window.partitionBy("query_id").orderBy(F.col("approx").desc(),
+                                                F.col("corpus_id").asc())
+    cand = (pairs.withColumn("rn", F.row_number().over(w1))
+            .where(F.col("rn") <= 10))
     dot = F.aggregate(F.zip_with("qv", "cv", lambda x, y: x * y),
                       F.lit(0.0), lambda acc, v: acc + v)
     nrm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0),

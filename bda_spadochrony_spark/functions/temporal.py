@@ -42,9 +42,3 @@ def calendar_features(df: DataFrame, ts_col: str) -> DataFrame:
     return (df.withColumn("hour", F.hour(ts_col))
               .withColumn("dayofweek", F.dayofweek(ts_col))
               .withColumn("month", F.month(ts_col)))
-
-
-def unix_seconds(ts_col: str) -> Column:
-    """Epoch seconds (reference ``pyspark/ML_stock.py:159``) — the order key
-    for range-frame windows."""
-    return F.unix_timestamp(F.col(ts_col))

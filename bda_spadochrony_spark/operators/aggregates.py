@@ -102,11 +102,6 @@ def agg_with_mode(df: DataFrame, keys: list[str], avg_col: str,
                 F.col(f"__m.{mode_col}").alias(f"mode_{mode_col}")))
 
 
-def global_agg(df: DataFrame, measures: list[Column]) -> DataFrame:
-    """No-group aggregate (A8; reference ``pyspark/ML_stock.py:177-179``)."""
-    return df.agg(*measures)
-
-
 def profile_columns(df: DataFrame, num_cols: list[str]) -> DataFrame:
     """ANALYZE-style numeric column profile in ONE pass: for each column,
     (n_rows, n_null, n_distinct, min, max, avg) — the stats collection a

@@ -1,4 +1,5 @@
-"""Filters / predicates (SURVEY §2.2 P7-P9).
+"""Filters / predicates (SURVEY §2.2 P7; P8-P9 are plain ``DataFrame.filter``
+and ``DataFrame.na.drop``).
 
 Expressed as Column predicates so Catalyst's PushDownPredicates moves them
 into the parquet scan (``PushedFilters`` in the physical plan) — at 100 TB a
@@ -8,14 +9,8 @@ before a single byte is decoded.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def filter_rows(df: DataFrame, predicate: Column) -> DataFrame:
-    """Generic predicate filter (P8; reference
-    ``filter(df.iconCategory == 6)`` at ``pyspark/ML_tomtom.py:165``)."""
-    return df.filter(predicate)
 
 
 def not_null(df: DataFrame, *cols: str) -> DataFrame:
@@ -27,9 +22,3 @@ def not_null(df: DataFrame, *cols: str) -> DataFrame:
     for c in cols[1:]:
         pred = pred & F.col(c).isNotNull()
     return df.filter(pred)
-
-
-def drop_any_null(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Drop rows with any null (P9; reference ``df.na.drop('any')`` before
-    training at ``pyspark/ML_stock.py:186``)."""
-    return df.na.drop("any", subset=subset)

@@ -1,4 +1,4 @@
-"""Projections / casts / renames (SURVEY §2.2 P1-P6, P13).
+"""Projections / renames (SURVEY §2.2 P1-P5, P13).
 
 Thin, deliberate wrappers: each is a single narrow transformation Catalyst
 collapses into one Project node, and naming them gives the engine a stable,
@@ -9,7 +9,6 @@ parquet scan's ReadSchema — project early, scan less.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 def project(df: DataFrame, cols: list) -> DataFrame:
@@ -34,8 +33,3 @@ def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
 def drop_cols(df: DataFrame, *cols: str) -> DataFrame:
     """Column drop (P5; reference ``pyspark/ML_tomtom.py:190-196``)."""
     return df.drop(*cols)
-
-
-def cast_cols(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Per-column cast (P6) in one projection."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in mapping.items()})

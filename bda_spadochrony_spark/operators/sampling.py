@@ -132,19 +132,6 @@ def hash_split(df: DataFrame, id_col: str, splits: dict[str, float],
     return df.withColumn(split_col, out)
 
 
-def hash_split_cutpoints(splits: dict[str, float]) -> list[tuple[str, int]]:
-    """The exact integer cut points ``hash_split`` uses, for restating the
-    assignment in an external SQL oracle: [(name, upper_bound_exclusive)]
-    for every split but the last (which is the CASE ELSE branch)."""
-    total = sum(splits.values())
-    names = list(splits)
-    acc, cuts = 0.0, []
-    for name in names[:-1]:
-        acc += splits[name] / total
-        cuts.append((name, int(acc * _MOD)))
-    return cuts
-
-
 def weighted_sample(df: DataFrame, id_col: str, weight_col: str,
                     k: int, salt: int = 0,
                     prune_groups: int = 64) -> DataFrame:

@@ -41,7 +41,6 @@ away; those still need the quiescent point.
 from __future__ import annotations
 
 import math
-from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -964,16 +963,6 @@ def _ann_index_recover(index_path: str, fs=None,
     _gc_orphans(fs, index_path, keep_oldgen=not purge_folded)
 
 
-def _has_parquet(path: str, fs=None) -> bool:
-    """True when the directory holds at least one parquet part file —
-    an EMPTY streamed epoch writes its ``batch_id=N`` directory with no
-    parts (dynamic partitionBy over zero rows), and reading a
-    footerless directory raises UNABLE_TO_INFER_SCHEMA; compact and
-    scan skip such dirs instead (r13 zero-rows edge sweep)."""
-    from bda_spadochrony_spark.fs import index_fs
-    return (fs or index_fs(path)).has_parquet(path)
-
-
 def _ann_index_scan(spark, index_path: str, cols: list[str]) -> DataFrame:
     """MANIFEST-AWARE read of a streamed IVF index (r13, VERDICT r12
     #1 — read isolation without a transaction log): instead of scanning
@@ -1130,8 +1119,7 @@ def ann_index_rebuild_pq(spark, index_path: str, source: DataFrame,
                          id_col: str, vec_col: str = "embedding",
                          n_cells: int | None = None, seed: int = 42,
                          codebooks: list | None = None, m: int = 8,
-                         codebook_k: int = 16,
-                         pack: bool = False) -> tuple:
+                         codebook_k: int = 16) -> tuple:
     """The codes layout's rebuild (r12): PQ codes are lossy, so a codes
     index cannot refit from itself (`ann_index_rebuild` handles the
     raw layout) — this one rebuilds FROM THE CORPUS SOURCE: refit
@@ -1158,7 +1146,7 @@ def ann_index_rebuild_pq(spark, index_path: str, source: DataFrame,
         codebooks = pq_codebooks(source, id_col, vec_col, m, codebook_k)
     staging = f"{index_path}__rebuild_{uuid.uuid4().hex[:8]}"
     ann_index_append_pq(source, -1, staging, centers, codebooks,
-                        id_col, vec_col, profile=True, pack=pack)
+                        id_col, vec_col, profile=True)
     old = f"{index_path}__old_{uuid.uuid4().hex[:8]}"
     pending = f"{index_path}__pending.json"
     fs.write_text_atomic(pending,
@@ -1395,8 +1383,7 @@ def ann_index_append_pq(batch_df: DataFrame, batch_id: int,
                         index_path: str, centers: DataFrame,
                         codebooks: list, id_col: str,
                         vec_col: str = "embedding",
-                        profile: bool = False,
-                        pack: bool = False) -> None:
+                        profile: bool = False) -> None:
     """The CODES-ONLY layout of the streamed IVF index (r12, VERDICT
     r11 #1 — composing the two r11 pieces that didn't yet):
     ``ann_index_append`` stores full float64 vectors while the batch
@@ -1412,37 +1399,18 @@ def ann_index_append_pq(batch_df: DataFrame, batch_id: int,
     ``ann_index_pq_topk`` (ADC tiles + bounded exact rerank against a
     vector side table).
 
-    ``pack=True`` (r13, VERDICT r12 #4 — implemented, MEASURED, and
-    left opt-in): bit-pack the m sub-codes into ONE int64 (map-side
-    literal multiply-adds; the ADC tile unpacks with vectorized numpy
-    shifts, values bit-identical under the stream_ann_index_pq
-    oracle). The measurement REFUTED the r12 docstring's prediction
-    that packing would widen the on-disk win: at the 10× fixture the
-    packed column is 5–10% LARGER at rest (0.48 vs 0.45 MB at the
-    contract quantizer; 0.39 vs 0.35 MB at 16 cells) because
-    parquet's dictionary+RLE already stores the 8 low-cardinality
-    sub-codes in ~5 B/row while the packed int64's 16^8 value space
-    defeats the dictionary — and the search A/B is a wash (15.3 vs
-    15.2 s at sf1; the tile decode is not the floor). The array
-    layout stays the default; the packed path stays available (and
-    tested) for encodings whose sub-code cardinality is too high for
-    dictionary pages. Like the quantizer, the LAYOUT is fixed at
-    index creation — ``ann_index_pq_topk`` auto-detects which one the
-    index holds from the stored column type, but batches must not mix.
+    ``codes`` is stored as an m-int array: parquet's dictionary+RLE
+    keeps the low-cardinality sub-codes at ~5 B/row, smaller at rest
+    than one bit-packed int64 per row (measured 0.45 vs 0.48 MB at the
+    10× fixture), and the tile decode is not the search floor.
 
     Same durability contract as the raw layout: ``batch_id=N``
     per-partition overwrite (at-least-once-safe replays), cell as the
     parquet partition key, quantizer AND codebooks fixed for the
-    index's lifetime — refit means rebuild. The codes/rnm expressions
-    are ``ivf_pq_topk``'s own (``pq_encode`` + the
-    ``pq_reconstruct`` norm fold), so a search over the streamed
-    index is value-identical to the one-shot operator — and to its
-    SQL oracle."""
-    # opt-in bit-packing (docstring): each sub-code takes ceil(log2 k)
-    # bits; packing engages only when the m sub-codes fit one int64
-    m_sub = len(codebooks) if codebooks else 0
-    bits = max(1, (len(codebooks[0]) - 1).bit_length()) if codebooks else 0
-    pack = pack and 0 < m_sub * bits <= 63
+    index's lifetime — refit means rebuild. The codes/rnm come from
+    ``ivf_pq_topk``'s own kernel (``_pq_corpus_cols``), so a search
+    over the streamed index is value-identical to the one-shot
+    operator — and to its SQL oracle."""
     vecs = valid_vectors(batch_df, vec_col).select(
         F.col(id_col).alias("corpus_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"))
@@ -1492,12 +1460,6 @@ def ann_index_append_pq(batch_df: DataFrame, batch_id: int,
                               center_rows=center_rows,
                               cell_type=cell_type,
                               want_codes=True, want_rnm=True)
-    if pack:
-        packed = reduce(
-            lambda a, b: a + b,
-            [F.element_at("codes", s + 1).cast("long")
-             * F.lit(1 << (s * bits)) for s in range(m_sub)])
-        out = out.withColumn("codes", packed)
     out = out.select("corpus_id", "cell", "codes", "rnm")
     (out.repartition(F.col("cell"))
      .write.mode("overwrite").partitionBy("cell")
@@ -1617,8 +1579,6 @@ def ann_index_pq_topk(spark, index_path: str, queries: DataFrame,
                       centers: DataFrame | None = None,
                       codebooks: list | None = None, k: int = 3,
                       n_candidates: int = 10, n_probe: int = 2,
-                      vectors_id: str | None = None,
-                      vectors_vec: str | None = None,
                       exclude_self: bool = True) -> DataFrame:
     """Partition-pruned ADC top-k search over a CODES-ONLY streamed IVF
     index built by ``ann_index_append_pq`` (r12): each query probes its
@@ -1627,24 +1587,22 @@ def ann_index_pq_topk(spark, index_path: str, queries: DataFrame,
     32-bit codes and one stored norm per row, never a float column —
     scoring runs through the shared ``_adc_cell_candidates`` tile, and
     the bounded exact rerank fetches full-precision vectors from
-    ``vectors`` (an (id, vec) side table — columns named by
-    ``vectors_id``/``vectors_vec``, defaulting to the query frame's
+    ``vectors`` (an (id, vec) side table with the query frame's column
     names: at 100 TB the row-store point-lookup by id over
-    n_candidates rows per query, never a corpus scan). With the same centers and codebooks the result is
-    value-identical to ``ivf_pq_topk`` — searching the streamed codes
-    index is verifiable against the one-shot operator's SQL oracle
-    (the ``stream_ann_index`` precedent, one rung further down the
-    storage ladder).
+    n_candidates rows per query, never a corpus scan). With the same
+    centers and codebooks the result is value-identical to
+    ``ivf_pq_topk`` — searching the streamed codes index is verifiable
+    against the one-shot operator's SQL oracle (the
+    ``stream_ann_index`` precedent, one rung further down the storage
+    ladder).
 
     The index read is MANIFEST-AWARE (r13, ``_ann_index_scan``): a
     crashed compaction or rebuild can never double-count or strand a
-    row. The stored ``codes`` column may be the r12 m-int array or the
-    r13 bit-packed int64 — detected from the column type, unpacked in
-    the numpy tile. ``exclude_self`` (r12 ADVICE): by default queries
-    are assumed to share the corpus id space (the self-search contract);
-    pass False for an external query frame whose ids live in a
-    different namespace, where an id collision must not drop a
-    legitimate neighbor."""
+    row. ``exclude_self`` (r12 ADVICE): by default queries are assumed
+    to share the corpus id space (the self-search contract); pass
+    False for an external query frame whose ids live in a different
+    namespace, where an id collision must not drop a legitimate
+    neighbor."""
     if centers is None or codebooks is None:
         raise ValueError(
             "ann_index_pq_topk requires the index's persisted quantizer "
@@ -1701,16 +1659,12 @@ def ann_index_pq_topk(spark, index_path: str, queries: DataFrame,
     idx = (_ann_index_scan(spark, index_path,
                            ["corpus_id", "cell", "codes", "rnm"])
            .where(F.col("cell").isin(cells)))
-    packed = None
-    if not dict(idx.dtypes)["codes"].startswith("array"):
-        packed = (len(codebooks),
-                  max(1, (len(codebooks[0]) - 1).bit_length()))
     cand = _adc_cell_candidates(idx, probes, n_candidates,
-                                exclude_self=exclude_self, packed=packed)
+                                exclude_self=exclude_self)
     # bounded join-back: n_candidates rows per query fetch full vectors
     vt = vectors.select(
-        F.col(vectors_id or query_id).alias("__vid"),
-        F.col(vectors_vec or vec_col).cast("array<double>").alias("__vv"))
+        F.col(query_id).alias("__vid"),
+        F.col(vec_col).cast("array<double>").alias("__vv"))
     exact = (cand
              .join(vt.select(F.col("__vid").alias("query_id"),
                              F.col("__vv").alias("qv")), "query_id")
@@ -1952,8 +1906,9 @@ def pq_encode(df: DataFrame, id_col: str, vec_col: str = "embedding",
               k: int = 16) -> DataFrame:
     """PQ-encode every vector: per subspace, the code is the argmin
     squared-euclidean centroid (ties → lowest code, the ``_assign_cells``
-    rule). MAP-ONLY vectorized Arrow kernel (r15): the codebooks ship in
-    the task closure, ``_np_fold_sq_dists`` reproduces the engine
+    rule). MAP-ONLY vectorized Arrow kernel (r15; the PQ corpus side's
+    ``_pq_corpus_cols`` with codes only): the codebooks ship in the
+    task closure, ``_np_fold_sq_dists`` reproduces the engine
     fold's summation order bit-for-bit, and ``np.argmin`` is the same
     first-minimum tie-break as ``array_position(array_min)`` — values
     equality-pinned against the r10 literal-fold form
@@ -1969,178 +1924,14 @@ def pq_encode(df: DataFrame, id_col: str, vec_col: str = "embedding",
     ``(s+1)·(d/m)`` gets ``code[s] = NULL``; extra trailing dims are
     ignored. Returns ``(id, codes array<int>)`` — the column a 100 TB
     candidate scan reads INSTEAD of the embeddings."""
-    import numpy as np
-
-    from pyspark.sql.types import (ArrayType, IntegerType, StructField,
-                                   StructType)
-
     if codebooks is None:
         codebooks = pq_codebooks(df, id_col, vec_col, m, k)
-    if not codebooks:
-        # empty codebook (empty/corrupt corpus): the empty codes frame
-        return valid_vectors(df, vec_col).select(
-            F.col(id_col),
-            F.array().cast("array<int>").alias("codes"))
-    m = len(codebooks)
-    ds = len(codebooks[0][0])
-    CBS = [np.array(cb, dtype=np.float64) for cb in codebooks]
+    # empty codebooks (empty/corrupt corpus) give every row empty codes
     out = valid_vectors(df, vec_col).select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("v"))
-    schema = StructType([
-        StructField(id_col, out.schema[id_col].dataType),
-        StructField("codes", ArrayType(IntegerType()))])
-
-    def encode(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            lens = pdf["v"].map(len).to_numpy()
-            groups = ([pdf] if (lens == lens[0]).all() else
-                      [g for _, g in pdf.groupby(lens, sort=False)])
-            for g in groups:
-                L = len(g["v"].iloc[0])
-                V = np.stack(g["v"].to_numpy()) if L else \
-                    np.zeros((len(g), 0))
-                cols = []
-                for s in range(m):
-                    if L >= (s + 1) * ds:
-                        d2 = _np_fold_sq_dists(V[:, s * ds:(s + 1) * ds],
-                                               CBS[s])
-                        cols.append(np.argmin(d2, axis=1).astype(object))
-                    else:
-                        # uncovered subspace: the fold's padded NULLs
-                        cols.append(np.full(len(g), None, dtype=object))
-                codes_m = np.stack(cols, axis=1)
-                res = g[[id_col]].copy()
-                res["codes"] = list(codes_m)
-                yield res
-
-    return out.mapInPandas(encode, schema=schema)
-
-
-def _with_pq_lut(df: DataFrame, vcol: str, codebooks: list,
-                 out_col: str = "lut") -> DataFrame:
-    """Append the per-query ADC lookup table ``lut[s][j] = <q_s, c_{s,j}>``
-    (Jégou et al. 2011 §IV) as a MAP-ONLY Arrow kernel (r15) — values
-    bit-identical to the ``_pq_lut_expr`` literal-fold column
-    (equality-pinned in tests/test_pipeline_ops.py): ``_np_fold_dots``
-    reproduces the per-subspace dot fold's summation order exactly, and
-    a subspace the vector does not fully cover yields the fold's padded
-    NULLs (``[NULL]*k``). Replaces the literal expression on the search
-    paths because its eager Catalyst analysis billed ~1.0 s of driver
-    time per call at the sf0.1 codebooks (tools/bench_ivfpq_split.py);
-    the downstream ADC tile (``_adc_cell_candidates``) is unchanged."""
-    import numpy as np
-
-    from pyspark.sql.types import (ArrayType, DoubleType, StructField,
-                                   StructType)
-
-    m = len(codebooks)
-    ds = len(codebooks[0][0])
-    kk = len(codebooks[0])
-    CBS = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    cols = df.columns
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(out_col, ArrayType(ArrayType(DoubleType())))])
-
-    def lut(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            lens = pdf[vcol].map(len).to_numpy()
-            groups = ([pdf] if (lens == lens[0]).all() else
-                      [g for _, g in pdf.groupby(lens, sort=False)])
-            for g in groups:
-                L = len(g[vcol].iloc[0])
-                V = np.stack(g[vcol].to_numpy()) if L else \
-                    np.zeros((len(g), 0))
-                per_s = []
-                for s in range(m):
-                    if L >= (s + 1) * ds:
-                        acc = _np_fold_dots(V[:, s * ds:(s + 1) * ds],
-                                            CBS[s])
-                        per_s.append([row.tolist() for row in acc])
-                    else:
-                        # uncovered subspace: the fold's padded NULLs
-                        per_s.append([[None] * kk] * len(g))
-                res = g[cols].copy()
-                res[out_col] = [[per_s[s][i] for s in range(m)]
-                                for i in range(len(g))]
-                yield res
-
-    return df.mapInPandas(lut, schema=schema)
-
-
-def _with_pq_recon(df: DataFrame, codes_col: str, codebooks: list,
-                   r_col: str | None = None,
-                   rnm_col: str | None = None) -> DataFrame:
-    """Append the PQ reconstruction (centroid concatenation) and/or its
-    L2 norm as a MAP-ONLY Arrow kernel (r15) — values bit-identical to
-    ``pq_reconstruct`` / the ``sqrt(aggregate(r, 0.0, acc + x*x))``
-    norm fold (equality-pinned in tests/test_pipeline_ops.py): the
-    gather copies centroid doubles verbatim in the same s-major order
-    ``flatten`` produced, the norm accumulates left-to-right in element
-    order, and a row with any NULL sub-code yields NULL for both (the
-    ``flatten``-of-NULL poisoning the expression form had). Replaces
-    the literal reconstruction expression because its eager Catalyst
-    analysis billed ~1.0 s of driver time per call at the sf0.1
-    codebooks (tools/bench_ivfpq_split.py)."""
-    import numpy as np
-
-    from pyspark.sql.types import (ArrayType, DoubleType, StructField,
-                                   StructType)
-
-    m = len(codebooks)
-    CBS = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    cols = df.columns
-    fields = list(df.schema.fields)
-    if r_col is not None:
-        fields.append(StructField(r_col, ArrayType(DoubleType())))
-    if rnm_col is not None:
-        fields.append(StructField(rnm_col, DoubleType()))
-    schema = StructType(fields)
-
-    def recon(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            raw = list(pdf[codes_col])
-
-            def _null(x):    # Arrow may surface an int-list NULL as NaN
-                return x is None or (isinstance(x, float) and x != x)
-
-            ok = np.array([c is not None and len(c) == m
-                           and not any(_null(x) for x in c)
-                           for c in raw])
-            res = pdf[cols].copy()
-            n = len(pdf)
-            r_vals = np.full(n, None, dtype=object)
-            rnm_vals = np.full(n, None, dtype=object)
-            if ok.any():
-                idx = np.flatnonzero(ok)
-                codes_int = np.array(
-                    [[int(x) for x in raw[i]] for i in idx])
-                R = np.concatenate(
-                    [CBS[s][codes_int[:, s]] for s in range(m)], axis=1)
-                if r_col is not None:
-                    for j, i in enumerate(idx):
-                        r_vals[i] = R[j].tolist()
-                if rnm_col is not None:
-                    acc = np.zeros(len(idx))
-                    for i in range(R.shape[1]):
-                        acc = acc + R[:, i] * R[:, i]
-                    rv = np.sqrt(acc)
-                    for j, i in enumerate(idx):
-                        rnm_vals[i] = float(rv[j])
-            if r_col is not None:
-                res[r_col] = r_vals
-            if rnm_col is not None:
-                res[rnm_col] = rnm_vals
-            yield res
-
-    return df.mapInPandas(recon, schema=schema)
+    return _pq_corpus_cols(out, "v", codebooks, keep=[id_col],
+                           want_codes=True)
 
 
 def _np_group_codes(V, L, CBS, ds):
@@ -2534,8 +2325,7 @@ def _pq_lut_expr(vcol: str, codebooks: list):
 
 
 def _adc_cell_candidates(corpus_side: DataFrame, probe_side: DataFrame,
-                         n_candidates: int, exclude_self: bool = True,
-                         packed: tuple[int, int] | None = None
+                         n_candidates: int, exclude_self: bool = True
                          ) -> DataFrame:
     """ADC scoring of probed IVF cells as cogrouped per-cell numpy
     LUT-gather tiles (r11, the ``_blas_cell_topk`` lesson applied to
@@ -2553,10 +2343,6 @@ def _adc_cell_candidates(corpus_side: DataFrame, probe_side: DataFrame,
     caller shares the rule; the finiteness contract is
     ``_blas_cell_topk``'s.
 
-    ``packed=(m, bits)`` (r13): the corpus ``codes`` column is one
-    bit-packed int64 per row (``ann_index_append_pq``'s at-rest
-    layout) — the tile unpacks it with vectorized shifts, so the plan
-    is unchanged and the scan reads 8 bytes of codes per row.
     ``exclude_self`` (r12 ADVICE): pass False when query ids live in a
     different namespace than corpus ids, so a collision never drops a
     legitimate neighbor."""
@@ -2578,14 +2364,8 @@ def _adc_cell_candidates(corpus_side: DataFrame, probe_side: DataFrame,
                  ppdf: pd.DataFrame) -> pd.DataFrame:
         if cpdf.empty or ppdf.empty:
             return empty_t
-        if packed is not None:
-            pm, pbits = packed
-            raw = cpdf["codes"].to_numpy(dtype=np.int64)
-            codes_m = ((raw[:, None] >> (np.arange(pm) * pbits))
-                       & ((1 << pbits) - 1))                      # B×m
-        else:
-            codes_m = np.stack([np.asarray(c, dtype=np.int64)
-                                for c in cpdf["codes"]])          # B×m
+        codes_m = np.stack([np.asarray(c, dtype=np.int64)
+                            for c in cpdf["codes"]])              # B×m
         lut_m = np.stack([np.stack([np.asarray(s, dtype=np.float64)
                                     for s in row])
                           for row in ppdf["lut"]])                # T×m×k
@@ -2616,110 +2396,6 @@ def _adc_cell_candidates(corpus_side: DataFrame, probe_side: DataFrame,
     return (tile_out.withColumn("rn", F.row_number().over(w1))
             .where(F.col("rn") <= n_candidates)
             .select("query_id", "corpus_id"))
-
-
-# Expected LSH bucket occupancy (n_vectors / 2^planes) above which the
-# int8 candidate stage switches from the codegen bucket-self-join +
-# window form to the per-bucket numpy Gram tile (``_int8_tile_topk``).
-# Measured at 20k vectors across forced plane counts
-# (tools/bench_ann_stack_buckets.py → plans/r16/ann_stack_buckets.json,
-# r16 — VERDICT r15 #5): the interpreted higher-order fold pays per
-# PAIR (n·b rows through the join), the tile pays one B×B int64 matmul
-# per bucket, so the join form grows linearly in occupancy while the
-# tile is flat — occupancy 5.2: 0.78 s join vs 2.90 s tile (the
-# r14/r15 "tile loses at sized buckets" result, reproduced); 39: 2.69
-# vs 1.83 (1.47×); 156: 7.49 vs 2.46 (3.0×); 625: 32.1 vs 2.25
-# (14.2×). Break-even ≈ 33; the gate sits at 32 so it never fires
-# where the tile loses and is live from break-even up. Under
-# ``planes_for`` sizing occupancy stays ≈8 until the max_planes=24 cap
-# binds (n > 2^24·8 ≈ 134M vectors — exactly the 100 TB regime); past
-# the cap occupancy grows as n/2^24 (n = 1e9 → ≈60 → tile ~1.5×+).
-# The two forms are value-identical (equality-pinned incl. duplicate
-# ids, zero-norm rows and exact approx ties in
-# tests/test_pipeline_ops.py, and candidate sets asserted equal on the
-# real 20k table at every config); the gate only moves the crossover.
-INT8_TILE_MIN_BUCKET = 32
-
-
-def _int8_tile_topk(d: DataFrame, n_candidates: int) -> DataFrame:
-    """``q_embedding_ann_stack``'s int8 candidate stage — bucket
-    self-join + interpreted ``aggregate(zip_with(...))`` dot products +
-    per-query window — as ONE per-bucket numpy Gram tile (r16, VERDICT
-    r15 #5; the ``_adc_cell_candidates`` pattern on the symmetric
-    int8 side). Input ``d`` is one row per vector:
-    ``(vec_id, v float64[], q int8-codes long[], qn double, bucket)``
-    with ``qn = sqrt(q·q)`` — an integer dot under the sqrt, so every
-    surviving row has ``qn >= 1`` and the tile's divisions can neither
-    underflow nor produce NaN/Inf (the window form's ``qna*qnb``
-    denominator is the same product of sqrt-of-integer doubles).
-
-    Value-equality argument (vs the join+window form):
-    - the tile's int64 ``Q @ Q.T`` equals the SQL long fold exactly
-      (integer addition is associative), and ``long→double`` then one
-      IEEE division reproduces ``cast("double") / (qna*qnb)`` bitwise;
-    - zero-norm rows are dropped by VALUE (the form's ``qn > 0``
-      filters), self-pairs are masked by ID VALUE (the form's
-      ``query_id != corpus_id``), both inside the tile;
-    - per query ROW the tile keeps its bucket-local top-n by
-      (approx desc, corpus_id asc) — every pair the form's global
-      window ranks in id X's top-n must rank at least as high within
-      its own row's bucket-local candidates, so the union provably
-      contains the window form's answer; the ONE slim window below
-      (over ≤ n·n_candidates emitted rows, not n·occupancy pairs)
-      re-ranks that union with the form's exact key, reproducing the
-      duplicate-id merge rule.
-    Output: ``(query_id, qv, corpus_id, cv)`` — the exact-rerank
-    inputs, ranked and cut to ``n_candidates`` per query id."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    sch = d.schema
-    out_schema = StructType([
-        StructField("query_id", sch["vec_id"].dataType),
-        StructField("qv", sch["v"].dataType),
-        StructField("corpus_id", sch["vec_id"].dataType),
-        StructField("cv", sch["v"].dataType),
-        StructField("approx", DoubleType())])
-    # the list columns need OBJECT dtype even empty — a default float64
-    # empty column makes Arrow's NumPyConverter balk at list<double>
-    empty_t = pd.DataFrame({"query_id": pd.Series([], dtype=object),
-                            "qv": pd.Series([], dtype=object),
-                            "corpus_id": pd.Series([], dtype=object),
-                            "cv": pd.Series([], dtype=object),
-                            "approx": pd.Series([], dtype="float64")})
-
-    def tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf[pdf["qn"].to_numpy(dtype=np.float64) > 0]
-        if len(pdf) < 2:
-            return empty_t
-        ids = pdf["vec_id"].to_numpy()
-        qn = pdf["qn"].to_numpy(dtype=np.float64)
-        vlist = pdf["v"].to_numpy()
-        q_m = np.stack([np.asarray(x, dtype=np.int64)
-                        for x in pdf["q"]])                       # B×dim
-        approx = (q_m @ q_m.T).astype(np.float64) / np.outer(qn, qn)
-        valid = ids[None, :] != ids[:, None]      # self-pairs, by VALUE
-        take = min(n_candidates, approx.shape[1])
-        order = np.lexsort((np.broadcast_to(ids, approx.shape),
-                            -approx, ~valid), axis=1)[:, :take]
-        nvalid = valid.sum(axis=1)
-        qi, r = np.nonzero(np.arange(take)[None, :] < np.minimum(
-            nvalid, take)[:, None])
-        ci = order[qi, r]
-        return pd.DataFrame({
-            "query_id": ids[qi], "qv": vlist[qi],
-            "corpus_id": ids[ci], "cv": vlist[ci],
-            "approx": approx[qi, ci]})
-
-    cand = (d.select("vec_id", "v", "q", "qn", "bucket")
-            .groupBy("bucket").applyInPandas(tile, schema=out_schema))
-    w = Window.partitionBy("query_id").orderBy(F.col("approx").desc(),
-                                               F.col("corpus_id").asc())
-    return (cand.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= n_candidates)
-            .select("query_id", "qv", "corpus_id", "cv"))
 
 
 def pairwise_cosine_blocked(df: DataFrame, id_col: str,

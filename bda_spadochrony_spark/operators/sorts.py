@@ -1,4 +1,4 @@
-"""Sorts / limits / set ops (SURVEY §2.6 O1-O6).
+"""Sorts / limits (SURVEY §2.6 O1-O4).
 
 A global ``orderBy`` is a range-partitioned total sort (sampling pass +
 shuffle); the engine keeps it sink-side only, exactly where the reference
@@ -26,9 +26,3 @@ def limit_rows(df: DataFrame, n: int) -> DataFrame:
 def first_row(df: DataFrame):
     """Scalar extraction (O4; reference ``pyspark/merge_stock.py:84``)."""
     return df.first()
-
-
-def random_split(df: DataFrame, weights: list[float], seed: int):
-    """Seeded random split (O6; reference 70/30 at ``pyspark/ML_stock.py:190``
-    seed 42, ``ML_tomtom.py:202`` seed 222)."""
-    return df.randomSplit(weights, seed=seed)

@@ -41,6 +41,44 @@ def _auto_compact(spark, index_path: str,
         ann_index_compact(spark, index_path, retain_folded=retain_folded)
 
 
+def _drain(stream_vecs: DataFrame, index_path: str, append, label: str,
+           checkpoint: str | None, timeout_s: int,
+           compact_every: int | None, retain_folded: bool
+           ) -> "StreamingQuery":
+    """The one drain loop both index layouts run: recover a crashed
+    promote, run ``append(batch_df, batch_id)`` over the available
+    micro-batches (availableNow), await them within ``timeout_s``, then
+    auto-compact. Recovery runs BEFORE the drain (r14, closing the r13
+    ADVICE data-loss window): a rebuild that crashed between its two
+    renames leaves the index rolled-back-able through its pending
+    sidecar, but an append that lands first would write new
+    ``batch_id=N`` directories into a fresh (or staged-new) index_path
+    AND commit them to the stream checkpoint — the later rollback would
+    then delete batches the checkpoint will never replay. Rolling the
+    crashed promote back first makes the drain land on the restored
+    index, so every checkpointed batch survives every crash point."""
+    from bda_spadochrony_spark.fs import index_fs
+    from bda_spadochrony_spark.operators.similarity import (
+        _ann_index_recover)
+    from bda_spadochrony_spark.streaming.runner import run_foreach_batch
+
+    # fs resolved from the session IN HAND (r15, ADVICE r14): the
+    # default would re-resolve via getActiveSession(), which can be
+    # None on worker threads / unusual driver setups even though the
+    # stream's own session is right here
+    _ann_index_recover(index_path,
+                       fs=index_fs(index_path, stream_vecs.sparkSession))
+    query = run_foreach_batch(stream_vecs, append, available_now=True,
+                              checkpoint=checkpoint)
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(
+            f"{label} drain did not finish within {timeout_s}s")
+    _auto_compact(stream_vecs.sparkSession, index_path, compact_every,
+                  retain_folded=retain_folded)
+    return query
+
+
 def stream_ann_index_build(stream_vecs: DataFrame, index_path: str,
                            centers: DataFrame, id_col: str,
                            vec_col: str = "embedding",
@@ -60,42 +98,16 @@ def stream_ann_index_build(stream_vecs: DataFrame, index_path: str,
     ``compact_every=N`` (r13) folds the per-batch directories into the
     compacted generation whenever a drain leaves N or more of them —
     the always-on index never needs an operator to remember
-    ``ann_index_compact``.
-
-    Recovery runs BEFORE the drain (r14, closing the r13 ADVICE data-loss
-    window): a rebuild that crashed between its two renames leaves the
-    index rolled-back-able through its pending sidecar, but an append
-    that lands first would write new ``batch_id=N`` directories into a
-    fresh (or staged-new) index_path AND commit them to the stream
-    checkpoint — the later rollback would then delete batches the
-    checkpoint will never replay. Rolling the crashed promote back
-    first makes the drain land on the restored index, so every
-    checkpointed batch survives every crash point."""
-    from bda_spadochrony_spark.fs import index_fs
-    from bda_spadochrony_spark.operators.similarity import (
-        _ann_index_recover, ann_index_append)
-    from bda_spadochrony_spark.streaming.runner import run_foreach_batch
-
-    # fs resolved from the session IN HAND (r15, ADVICE r14): the
-    # default would re-resolve via getActiveSession(), which can be
-    # None on worker threads / unusual driver setups even though the
-    # stream's own session is right here
-    _ann_index_recover(index_path,
-                       fs=index_fs(index_path, stream_vecs.sparkSession))
+    ``ann_index_compact``. A crashed promote is recovered BEFORE any
+    micro-batch is appended and checkpointed (``_drain``)."""
+    from bda_spadochrony_spark.operators.similarity import ann_index_append
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         ann_index_append(batch_df, batch_id, index_path, centers,
                          id_col, vec_col, profile=profile)
 
-    query = run_foreach_batch(stream_vecs, fn, available_now=True,
-                              checkpoint=checkpoint)
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"ann index drain did not finish within {timeout_s}s")
-    _auto_compact(stream_vecs.sparkSession, index_path, compact_every,
-                  retain_folded=retain_folded)
-    return query
+    return _drain(stream_vecs, index_path, fn, "ann index", checkpoint,
+                  timeout_s, compact_every, retain_folded)
 
 
 def stream_ann_index_build_pq(stream_vecs: DataFrame, index_path: str,
@@ -105,7 +117,6 @@ def stream_ann_index_build_pq(stream_vecs: DataFrame, index_path: str,
                               timeout_s: int = 300,
                               profile: bool = False,
                               compact_every: int | None = None,
-                              pack: bool = False,
                               retain_folded: bool = False
                               ) -> "StreamingQuery":
     """The CODES-ONLY variant of the index drain (r12, VERDICT r11 #1):
@@ -123,31 +134,17 @@ def stream_ann_index_build_pq(stream_vecs: DataFrame, index_path: str,
     directories into the compacted generation once a drain leaves N or
     more of them. Like the raw drain, a crashed promote is recovered
     BEFORE any micro-batch is appended and checkpointed (r14 — see
-    ``stream_ann_index_build``): rollback-after-drain would delete
-    batches the checkpoint considers done."""
-    from bda_spadochrony_spark.fs import index_fs
+    ``_drain``): rollback-after-drain would delete batches the
+    checkpoint considers done."""
     from bda_spadochrony_spark.operators.similarity import (
-        _ann_index_recover, ann_index_append_pq)
-    from bda_spadochrony_spark.streaming.runner import run_foreach_batch
-
-    # session-in-hand fs resolution (r15, ADVICE r14 — see the raw drain)
-    _ann_index_recover(index_path,
-                       fs=index_fs(index_path, stream_vecs.sparkSession))
+        ann_index_append_pq)
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         ann_index_append_pq(batch_df, batch_id, index_path, centers,
-                            codebooks, id_col, vec_col, profile=profile,
-                            pack=pack)
+                            codebooks, id_col, vec_col, profile=profile)
 
-    query = run_foreach_batch(stream_vecs, fn, available_now=True,
-                              checkpoint=checkpoint)
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"pq ann index drain did not finish within {timeout_s}s")
-    _auto_compact(stream_vecs.sparkSession, index_path, compact_every,
-                  retain_folded=retain_folded)
-    return query
+    return _drain(stream_vecs, index_path, fn, "pq ann index", checkpoint,
+                  timeout_s, compact_every, retain_folded)
 
 
 def stream_ann_index_maintain(stream_vecs: DataFrame, index_path: str,
@@ -227,7 +224,6 @@ def stream_ann_index_maintain_pq(stream_vecs: DataFrame, index_path: str,
                                  max_inflation: float = 1.5,
                                  n_cells: int | None = None,
                                  seed: int = 42,
-                                 pack: bool = False,
                                  retain_folded: bool = False,
                                  lease_ttl_s: float | None = None
                                  ) -> tuple:
@@ -266,7 +262,7 @@ def stream_ann_index_maintain_pq(stream_vecs: DataFrame, index_path: str,
                                   codebooks, id_col, vec_col,
                                   checkpoint=checkpoint,
                                   timeout_s=timeout_s, profile=True,
-                                  compact_every=compact_every, pack=pack,
+                                  compact_every=compact_every,
                                   retain_folded=retain_folded)
         decision = ann_index_drift(spark, index_path, centers, reference,
                                    max_kl=max_kl,
@@ -276,5 +272,5 @@ def stream_ann_index_maintain_pq(stream_vecs: DataFrame, index_path: str,
             return centers, codebooks, reference, False
         centers2, codebooks2, reference2 = ann_index_rebuild_pq(
             spark, index_path, source, id_col, vec_col=vec_col,
-            n_cells=n_cells, seed=seed, pack=pack)
+            n_cells=n_cells, seed=seed)
         return centers2.localCheckpoint(), codebooks2, reference2, True

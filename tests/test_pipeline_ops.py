@@ -2844,6 +2844,17 @@ def test_pq_encode_kernel_matches_literal_fold(spark):
     # 8 subspaces, the rest are NULL; 80-dim covers all 8
     assert k[900][4:] == (None,) * 4 and None not in k[900][:4]
     assert None not in k[901]
+    # empty codebooks (what an empty corpus fits): every valid row gets
+    # empty codes; an empty frame encodes to no rows
+    empty = df.where(F.lit(False))
+    assert S.pq_codebooks(empty, "vec_id") == []
+    for frame in (df, empty):
+        k = S.pq_encode(frame, "vec_id", codebooks=[])
+        e = S._pq_encode_expr(frame, "vec_id", codebooks=[])
+        assert k.dtypes == e.dtypes
+        assert ({r["vec_id"]: tuple(r["codes"]) for r in k.collect()}
+                == {r["vec_id"]: tuple(r["codes"]) for r in e.collect()})
+    assert S.pq_encode(empty, "vec_id").count() == 0
 
 
 def test_pq_fused_kernels_match_components(spark):
@@ -3111,95 +3122,3 @@ def test_kernel_center_rows_degenerate_quantizers(spark, tmp_path, case):
     for name, run in entries.items():
         with pytest.raises(ValueError, match=fault):
             run(bad)
-
-
-# The int8 candidate-stage tile (VERDICT r15 #5): _int8_tile_topk must
-# equal q_embedding_ann_stack's bucket-self-join + interpreted-fold +
-# window form on every row class — the gate
-# (INT8_TILE_MIN_BUCKET, big-bucket regime only) may move the
-# crossover, never the values.
-
-def _r16_int8_fixture(spark):
-    """(vec_id, v, q, qn, bucket) rows covering: duplicate ids in the
-    SAME and in DIFFERENT buckets, a zero-code row (qn=0 — the form's
-    qn>0 filters drop it), and EXACT approx ties (identical codes →
-    approx exactly 1.0; the corpus_id-asc tie-break decides)."""
-    rows = [
-        # bucket 00: 1,2,3 distinct codes; id 1 duplicated with other
-        # codes+vector; id 4 all-zero codes
-        (1, [1.0, 0.0], [3, 1, 0, 2], "00"),
-        (1, [1.0, 1.0], [0, 2, 1, 1], "00"),
-        (2, [2.0, 0.0], [1, 3, 2, 0], "00"),
-        (3, [3.0, 0.0], [2, 0, 3, 1], "00"),
-        (4, [4.0, 0.0], [0, 0, 0, 0], "00"),
-        # bucket 01: identical codes for 5/6/7 → every cross approx is
-        # exactly 1.0, rank decided purely by corpus_id asc; id 2's
-        # second instance lives here (duplicate across buckets)
-        (5, [5.0, 0.0], [2, 2, 1, 1], "01"),
-        (6, [6.0, 0.0], [2, 2, 1, 1], "01"),
-        (7, [7.0, 0.0], [2, 2, 1, 1], "01"),
-        (2, [2.0, 1.0], [4, 1, 1, 3], "01"),
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id: long, v: array<double>, q: array<long>, "
-              "bucket: string")
-    idot = lambda a, b: F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"),
-        lambda acc, v: acc + v)
-    return df.withColumn(
-        "qn", F.sqrt(idot(F.col("q"), F.col("q")).cast("double")))
-
-
-def test_int8_tile_topk_matches_join_window_form(spark):
-    from collections import Counter
-
-    from pyspark.sql import Window
-    d = _r16_int8_fixture(spark)
-    idot = lambda a, b: F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"),
-        lambda acc, v: acc + v)
-    a = d.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-                 F.col("q").alias("qa"), F.col("qn").alias("qna"), "bucket")
-    b = d.select(F.col("vec_id").alias("corpus_id"), F.col("v").alias("cv"),
-                 F.col("q").alias("qb"), F.col("qn").alias("qnb"), "bucket")
-    pairs = (a.join(b, "bucket")
-             .where((F.col("query_id") != F.col("corpus_id")) &
-                    (F.col("qna") > 0) & (F.col("qnb") > 0))
-             .withColumn("approx",
-                         idot(F.col("qa"), F.col("qb")).cast("double") /
-                         (F.col("qna") * F.col("qnb"))))
-    w1 = Window.partitionBy("query_id").orderBy(F.col("approx").desc(),
-                                                F.col("corpus_id").asc())
-    for k in (1, 2, 10):
-        win = Counter((r["query_id"], tuple(r["qv"]),
-                       r["corpus_id"], tuple(r["cv"])) for r in
-                      pairs.withColumn("rn", F.row_number().over(w1))
-                      .where(F.col("rn") <= k)
-                      .select("query_id", "qv", "corpus_id", "cv")
-                      .collect())
-        til = Counter((r["query_id"], tuple(r["qv"]),
-                       r["corpus_id"], tuple(r["cv"])) for r in
-                      S._int8_tile_topk(d, k).collect())
-        assert til == win, f"k={k}"
-    # rules pinned explicitly, not only via the reference (k=2 tile):
-    out = S._int8_tile_topk(d, 2).collect()
-    per_id = Counter(r["query_id"] for r in out)
-    assert per_id[1] == 2 and per_id[2] == 2   # dup ids merge to ONE top-k
-    assert 4 not in per_id                     # zero-code query dropped
-    assert all(r["corpus_id"] != 4 for r in out)  # ...and never a candidate
-    tie = sorted(r["corpus_id"] for r in out if r["query_id"] == 7)
-    assert tie == [5, 6]                       # exact tie → corpus_id asc
-
-
-def test_embedding_ann_stack_tile_gate_value_neutral(spark, monkeypatch):
-    """The declared query's tile branch (gate forced ON) must return
-    exactly what the default join+window branch returns at sf0.001 —
-    the gate is a crossover choice, never a value change."""
-    import __spark_entry__ as entry
-    sf = "/root/testdata/sf0.001"
-    base = sorted(tuple(r) for r in
-                  entry.q_embedding_ann_stack(spark, sf).collect())
-    monkeypatch.setattr(S, "INT8_TILE_MIN_BUCKET", 0)
-    tile = sorted(tuple(r) for r in
-                  entry.q_embedding_ann_stack(spark, sf).collect())
-    assert tile == base and len(base) > 0

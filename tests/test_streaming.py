@@ -2310,49 +2310,6 @@ def test_ann_index_search_exclude_self_namespaces(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_ann_index_pq_packed_layout_roundtrip(spark):
-    """r13 (VERDICT r12 #4): the OPT-IN bit-packed codes layout — one
-    int64 per row instead of the m-int array — stores a scalar long at
-    rest, is auto-detected by the search, unpacks in the ADC tile with
-    vectorized shifts, and returns value-identical results to the array
-    layout. It stays opt-in because the 10× A/B measured the packed
-    column 5–10% LARGER at rest (parquet dictionary+RLE beats manual
-    packing on low-cardinality sub-codes) and the search a wash —
-    numbers in SCALE.md and the append docstring."""
-    from bda_spadochrony_spark.operators.similarity import (
-        ann_index_append_pq, ann_index_pq_topk, pq_codebooks)
-    from bda_spadochrony_spark.sources.readers import scan
-    emb = scan(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    centers = emb.where(F.col("vec_id") < 16).select(
-        F.col("vec_id").cast("int").alias("cell"),
-        F.col("embedding").alias("centroid")).localCheckpoint()
-    cbs = pq_codebooks(emb, "vec_id")
-    base = tempfile.mkdtemp(prefix="bda_annidx_pack_")
-    arr_idx = os.path.join(base, "arr")
-    pk_idx = os.path.join(base, "pk")
-    try:
-        ann_index_append_pq(emb, 0, arr_idx, centers, cbs, "vec_id")
-        ann_index_append_pq(emb, 0, pk_idx, centers, cbs, "vec_id",
-                            pack=True)
-        types = dict(spark.read.parquet(pk_idx).dtypes)
-        assert types["codes"] == "bigint", types
-        assert dict(spark.read.parquet(arr_idx).dtypes)["codes"] \
-            .startswith("array")
-
-        def search(idx):
-            return sorted((r["query_id"], r["corpus_id"],
-                           round(r["cosine"], 9)) for r in
-                          ann_index_pq_topk(spark, idx, emb, "vec_id",
-                                            vectors=emb, centers=centers,
-                                            codebooks=cbs, k=3,
-                                            n_candidates=10,
-                                            n_probe=2).collect())
-
-        assert search(pk_idx) == search(arr_idx)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def test_stream_ann_index_drift_trigger(spark):
     """r12: the streamed index's rebuild trigger end to end — appends
     with profile=True leave quantizer-census sidecars, and
